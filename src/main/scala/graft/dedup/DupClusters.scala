@@ -231,13 +231,16 @@ object DupClusters {
     * pair — singletons are their own cluster). */
   def resolve(docs: DataFrame, idCol: String, pairs: DataFrame,
               maxIter: Int = 20,
-              driverMaxEdges: Long = 1L << 20): DataFrame = {
-    val comp = connectedComponents(pairs, maxIter, driverMaxEdges)
-      .withColumnRenamed("id", idCol)
-    docs.join(comp, Seq(idCol), "left")
+              driverMaxEdges: Long = 1L << 20): DataFrame =
+    label(docs, idCol, connectedComponents(pairs, maxIter, driverMaxEdges))
+
+  /** [[resolve]] over an already-computed [[connectedComponents]] map —
+    * for callers that own (and release) the map's cache themselves. */
+  private[graft] def label(docs: DataFrame, idCol: String,
+                           components: DataFrame): DataFrame =
+    docs.join(components.withColumnRenamed("id", idCol), Seq(idCol), "left")
       .withColumn("cluster_id", coalesce(col("cluster"), col(idCol)))
       .drop("cluster")
-  }
 
   /** One survivor per cluster: the minimum-id member (plus every
     * singleton). */
@@ -258,12 +261,16 @@ object DupClusters {
   def survivorsBy(docs: DataFrame, idCol: String, pairs: DataFrame,
                   prefer: org.apache.spark.sql.Column,
                   maxIter: Int = 20,
-                  driverMaxEdges: Long = 1L << 20): DataFrame = {
+                  driverMaxEdges: Long = 1L << 20): DataFrame =
+    best(resolve(docs, idCol, pairs, maxIter, driverMaxEdges), idCol, prefer)
+
+  /** [[survivorsBy]]'s pick over already-[[label]]ed docs. */
+  private[graft] def best(labeled: DataFrame, idCol: String,
+                          prefer: org.apache.spark.sql.Column): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("cluster_id"))
       .orderBy(prefer.desc, col(idCol).asc)
-    resolve(docs, idCol, pairs, maxIter, driverMaxEdges)
-      .withColumn("__rk", row_number().over(w))
+    labeled.withColumn("__rk", row_number().over(w))
       .filter(col("__rk") === 1)
       .drop("__rk", "cluster_id")
   }

@@ -4,10 +4,11 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Pigeonhole banding over 64-bit Hamming-space fingerprints — the shared
-  * candidate generator behind every perceptual near-dup face (image dHash,
-  * audio fingerprint): split the hash into `maxHamming + 1` contiguous bit
-  * bands, so any pair within the Hamming bound shares at least one band
-  * unchanged (pigeonhole); candidates come from an equi-join on
+  * candidate generator behind every perceptual near-dup face
+  * ([[PerceptualDedup]]: image dHash, audio fingerprint, video fold):
+  * split the hash into `maxHamming + 1` contiguous bit bands, so any
+  * pair within the Hamming bound shares at least one band unchanged
+  * (pigeonhole); candidates come from an equi-join on
   * (band, value) — never an all-pairs scan — and each candidate is
   * verified exactly with one XOR + bit_count. Degenerate band buckets
   * (a constant-content corpus) are capped LOUDLY, mirroring the MinHash
@@ -57,11 +58,17 @@ object HammingBands {
         Seq("band", "value"))
       .filter(bit_count(col("__hc").bitwiseXOR(col("__he"))) <= maxHamming)
       .select(idCol).distinct()
-    corpusHashes.select(idCol)
-      .join(hits.withColumn("contaminated", lit(true)), Seq(idCol), "left")
+    flag(corpusHashes.select(idCol), hits, idCol)
+  }
+
+  /** (idCol, contaminated) for every row of `ids`: true iff its id is
+    * among `hits` — the outcome join every decontamination face ends
+    * with. */
+  private[graft] def flag(ids: DataFrame, hits: DataFrame,
+                          idCol: String): DataFrame =
+    ids.join(hits.withColumn("contaminated", lit(true)), Seq(idCol), "left")
       .select(col(idCol),
         coalesce(col("contaminated"), lit(false)).as("contaminated"))
-  }
 
   /** Near-dup pairs among (idCol, hashCol) rows: banded candidate
     * generation + exact Hamming verify. Output (id_a, id_b, hamming),
@@ -76,19 +83,18 @@ object HammingBands {
     * The input frame is evaluated once; callers whose hash lineage is
     * expensive — a media decode pass — should still persist it (the
     * banded frame is their lineage re-run once), as
-    * `multimodal/ImageDedup.nearDupPairs` and its audio sibling do.
-    * The persisted banded frame is released only by the session's cache
-    * lifecycle (the returned pairs stay lazily derivable from it). */
+    * [[PerceptualDedup]] does. The banded frame persists under the
+    * caller's [[Cached]] scope, which releases it once the caller has
+    * materialized what it derived from the returned (lazy) pairs. */
   def pairs(hashes: DataFrame, idCol: String, hashCol: String,
             maxHamming: Int, maxBucket: Long, tag: String): DataFrame = {
     require(maxHamming >= 1 && maxHamming <= 16,
       s"maxHamming $maxHamming not in [1,16]")
     val banded = explodeBands(hashes.select(col(idCol), col(hashCol)),
       hashCol, maxHamming)
-    val counted = banded.withColumn("__bcnt",
+    val counted = Cached.hold(banded.withColumn("__bcnt",
       count(lit(1)).over(org.apache.spark.sql.expressions.Window
-        .partitionBy(col("band"), col("value"))))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .partitionBy(col("band"), col("value")))))
     val big = counted.filter(col("__bcnt") > maxBucket)
       .select(col("band"), col("value"), col("__bcnt")).distinct()
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))

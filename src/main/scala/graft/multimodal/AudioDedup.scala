@@ -1,22 +1,23 @@
 package graft.multimodal
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-import Multimodal.{MediaCounters, MediaRecord}
+import graft.dedup.PerceptualDedup
+import graft.dedup.PerceptualDedup.Fingerprint
+import Multimodal.{MediaCounters, fingerprintPass}
 
 /** Perceptual AUDIO deduplication over REAL decoded samples — the audio
   * sibling of [[ImageDedup]]: a 64-bit fingerprint from the decoded PCM's
   * peak-normalized energy envelope plus per-segment zero-crossing rates
   * (the crude-but-classic spectral proxy), so uniform volume changes and
   * container re-encodes map to the same hash while different tones and
-  * rhythms land apart. Exact dedup is a hash groupBy; incremental
-  * admission reuses the shared Bloom path
-  * ([[graft.dedup.IncrementalDedup]]), so a growing committed corpus is
-  * never re-scanned beyond the sketch. The hash pass is map-only
-  * (one decoder init per partition); nothing here shuffles vectors.
+  * rhythms land apart. The part fingerprint hashes fixed-length WINDOWS,
+  * which re-align after trims and silence padding.
+  *
+  * This object holds the decode seam, the fingerprint kernels and their
+  * map-only passes; every dedup face is an adapter onto
+  * [[graft.dedup.PerceptualDedup]]. Faces returning a frame follow the
+  * [[graft.dedup.Cached]] contract.
   */
 object AudioDedup {
 
@@ -200,136 +201,33 @@ object AudioDedup {
     bits
   }
 
-  /** Map-only hash pass: (media_id, ahash). Non-audio or undecodable
-    * payloads refuse loudly — a silently skipped file is a duplicate
-    * that survives. */
-  def hashAudio(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions(_.map { r =>
-      require(r.media_type == "audio",
-        s"media_id=${r.media_id}: audio fingerprint over ${r.media_type}")
-      (r.media_id, fingerprint64(r.payload))
-    }).toDF("media_id", "ahash")
-  }
+  private[multimodal] val ahash =
+    Fingerprint("audio", "ahash", "audio-dedup", hashAudio)
+  private def windows(windowFrames: Int, hopFrames: Int,
+                      silenceFloor: Long) = Fingerprint("audio", "whash",
+    "audio-windows", hashWindows(_, windowFrames, hopFrames, silenceFloor),
+    Seq("window_idx"))
 
-  /** Exact perceptual dedup: every clip labeled with its group's
-    * representative (min media_id sharing the fingerprint). */
-  def exactGroups(media: DataFrame): DataFrame =
-    hashAudio(media).withColumn("group_rep",
-      min(col("media_id")).over(Window.partitionBy(col("ahash"))))
-      .select("media_id", "ahash", "group_rep")
+  /** Map-only hash pass: (media_id, ahash), one PCM decode per record. */
+  def hashAudio(media: DataFrame): DataFrame =
+    fingerprintPass(media, "audio", "media_id", "ahash")(r =>
+      Iterator.single((r.media_id, fingerprint64(r.payload))))
 
-  /** O(batch) incremental admission against a committed fingerprint
-    * store (one string column `h`), through the shared Bloom-prefilter
-    * path — byte-identical to the exact anti-join. */
-  def incrementalSurvivors(batch: DataFrame, committedHashes: DataFrame,
-                           fpp: Double = 0.01): DataFrame =
-    graft.dedup.IncrementalDedup.survivors(
-      hashAudio(batch), committedHashes, "media_id",
-      col("ahash").cast("string"), fpp)
-
-  /** Near-duplicate pairs among (media_id, ahash) rows: the fingerprint
-    * is Hamming-meaningful (3 envelope + 5 zero-crossing bits per
-    * segment — a detuned or re-leveled copy moves a handful of bits), so
-    * the image path's pigeonhole banding applies verbatim through the
-    * shared [[graft.dedup.HammingBands]]. Output (id_a, id_b, hamming),
-    * id_a < id_b. The hash lineage (a full PCM decode when `hashes`
-    * comes straight off [[hashAudio]]) feeds the shed census and both
-    * join sides, so it is persisted and materialized here — each clip
-    * decodes exactly ONCE per job. The returned frame is PERSISTED;
-    * unpersist it once consumed. */
-  def nearDupPairs(hashes: DataFrame, maxHamming: Int,
-                   maxBucket: Long = 100000L): DataFrame = {
-    val h = hashes.persist(StorageLevel.MEMORY_AND_DISK)
-    h.count(): Unit // materialize: the decode pass runs exactly once
-    val pairs = graft.dedup.HammingBands.pairs(
-      h, "media_id", "ahash", maxHamming, maxBucket, "audio-dedup")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    pairs.count(): Unit // pin the (tiny) pairs, then release the hashes
-    h.unpersist()
-    pairs
-  }
-
-  /** Audio DECONTAMINATION — the audio face of the eval-set leak guard:
-    * flag every corpus clip whose fingerprint lies within `maxHamming`
-    * of ANY eval clip (re-leveled and slightly detuned copies of
-    * benchmark audio included). Bounded eval broadcast, zero corpus
-    * shuffle, one PCM decode per side per job (both hash frames are
-    * persisted across the probe and outcome branches). Output: every
-    * corpus row's (media_id, contaminated), PERSISTED — unpersist once
-    * consumed. */
-  def decontaminate(corpus: DataFrame, eval: DataFrame, maxHamming: Int,
-                    maxEval: Long = 100000L): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 16,
-      s"maxHamming $maxHamming not in [0,16]")
-    val evalHashes = hashAudio(eval).persist(StorageLevel.MEMORY_AND_DISK)
-    try { // eval unpersists on EVERY exit — a maxEval refusal must not
-      // leak a cache that silently serves the next job's hash frame
-      val nEval = evalHashes.count() // also materializes: eval decodes once
-      require(nEval <= maxEval,
-        s"eval set has $nEval clips > maxEval=$maxEval — a broadcast this " +
-          "size would flood the executors; raise maxEval deliberately")
-      val corpusHashes = hashAudio(corpus)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      corpusHashes.count(): Unit
-      try {
-        val out = graft.dedup.HammingBands.decontaminateProbe(
-          corpusHashes, evalHashes, "media_id", "ahash", maxHamming)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        out.count(): Unit
-        out
-      } finally { corpusHashes.unpersist(); () }
-    } finally { evalHashes.unpersist(); () }
-  }
-
-  /** Near-dup clusters over an audio table: hash, pair, resolve connected
-    * components — detuned (±1 zero-crossing bucket) and re-leveled
-    * variants land in their base's cluster. Output (media_id,
-    * cluster_id), singletons their own cluster; the returned frame is
-    * PERSISTED — unpersist once consumed. One decode per clip per job
-    * (the hash frame is persisted across the pairing and vertex uses). */
-  def clusters(media: DataFrame, maxHamming: Int,
-               maxBucket: Long = 100000L): DataFrame = {
-    val h = hashAudio(media).persist(StorageLevel.MEMORY_AND_DISK)
-    h.count(): Unit // materialize: the decode pass runs exactly once
-    try {
-      val pairs = graft.dedup.HammingBands.pairs(
-        h, "media_id", "ahash", maxHamming, maxBucket, "audio-dedup")
-        .select(col("id_a"), col("id_b"))
-      val out = graft.dedup.DupClusters.resolve(
-        h.select(col("media_id")), "media_id", pairs)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      out.count(): Unit
-      out
-    } finally { h.unpersist(); () }
-  }
-
-  /** Map-only WINDOW hash pass — the SHIFT-TOLERANT fingerprint: one
-    * row per non-silent fixed-length window, (media_id, window_idx,
-    * whash), whash = the 8-segment envelope/ZCR fingerprint of frames
-    * [idx*hop, idx*hop+windowFrames). The whole-clip fingerprint
-    * ([[fingerprint64]]) re-buckets EVERY segment when a copy is
-    * trimmed or silence-padded — its 8 segments span the clip — so
-    * such copies land far away; fixed-duration windows re-align after
-    * any hop-multiple shift, the audio analogue of
-    * [[VideoDedup.hashFrames]]. Windows whose mean |amplitude| is
-    * below `silenceFloor` are DROPPED: silent stretches carry no
-    * content and would otherwise pair every padded clip with every
-    * other. One PCM decode per clip per job. A trailing partial window
-    * shorter than windowFrames is skipped (its segment geometry would
-    * differ from every aligned window's). */
+  /** Map-only WINDOW pass — the SHIFT-TOLERANT fingerprint: (media_id,
+    * window_idx, whash), whash = the envelope/ZCR fingerprint of frames
+    * [idx*hop, idx*hop+windowFrames). Fixed-duration windows re-align
+    * after any hop-multiple shift, where the whole-clip fingerprint's 8
+    * clip-spanning segments all re-bucket. Windows with mean |amplitude|
+    * below `silenceFloor` are DROPPED (silence would pair every padded
+    * clip with every other), as is a trailing partial window. One PCM
+    * decode per clip. */
   def hashWindows(media: DataFrame, windowFrames: Int, hopFrames: Int,
                   silenceFloor: Long = 100L): DataFrame = {
     require(windowFrames >= Segments,
       s"windowFrames=$windowFrames must be >= $Segments")
     require(hopFrames >= 1 && hopFrames <= windowFrames,
       s"hopFrames=$hopFrames not in [1, windowFrames]")
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions(_.flatMap { r =>
-      require(r.media_type == "audio",
-        s"media_id=${r.media_id}: audio fingerprint over ${r.media_type}")
+    fingerprintPass(media, "audio", "media_id", "window_idx", "whash") { r =>
       val samples = decodeMono(r.payload)
       val lastStart = samples.length - windowFrames
       val nWindows = if (lastStart < 0) 0 else lastStart / hopFrames + 1
@@ -342,164 +240,82 @@ object AudioDedup {
         if (sum / windowFrames < silenceFloor) None
         else Some((r.media_id, w, fingerprintSamples(samples, from, until)))
       }
-    }).toDF("media_id", "window_idx", "whash")
+    }
   }
 
-  /** Window-overlap edges: banded window pairing over a two-column
-    * (media_id, window_idx) struct key, aggregated to clip pairs with
-    * >= minShared distinct matching window pairs — the same shape as
-    * [[VideoDedup]]'s frame overlap. */
-  private def windowEdges(windows: DataFrame, maxHamming: Int,
-                          minShared: Int, maxBucket: Long): DataFrame = {
-    require(minShared >= 1, s"minShared=$minShared must be >= 1")
-    val wids = windows.select(
-      struct(col("media_id"), col("window_idx")).as("wid"), col("whash"))
-    graft.dedup.HammingBands.pairs(
-      wids, "wid", "whash", maxHamming, maxBucket, "audio-windows")
-      .select(col("id_a.media_id").as("ca"), col("id_b.media_id").as("cb"),
-        col("id_a"), col("id_b"))
-      .filter(col("ca") =!= col("cb"))
-      .select(least(col("ca"), col("cb")).as("id_a"),
-        greatest(col("ca"), col("cb")).as("id_b"),
-        col("id_a").as("wa"), col("id_b").as("wb"))
-      .groupBy("id_a", "id_b")
-      .agg(countDistinct(struct(col("wa"), col("wb"))).as("shared"))
-      .filter(col("shared") >= minShared)
-  }
+  /** Exact dedup: (media_id, ahash, group_rep), group_rep = min media_id
+    * sharing the fingerprint. */
+  def exactGroups(media: DataFrame): DataFrame =
+    PerceptualDedup.exactGroups(media, ahash)
 
-  /** SHIFT-TOLERANT near-dup pairs: clips sharing at least `minShared`
-    * near-identical windows — the duplicate class the whole-clip
-    * fingerprint cannot see (a TRIMMED or silence-PADDED copy re-buckets
-    * all 8 clip-spanning segments, but its hop-aligned windows are
-    * sample-identical to the original's). Output (id_a, id_b, shared),
-    * id_a < id_b. One PCM decode per clip; PERSISTED — unpersist once
-    * consumed. */
+  /** O(batch) admission against a committed fingerprint store (one
+    * string column `h`) through the shared Bloom path. */
+  def incrementalSurvivors(batch: DataFrame, committedHashes: DataFrame,
+                           fpp: Double = 0.01): DataFrame =
+    PerceptualDedup.incrementalSurvivors(batch, committedHashes, ahash, fpp)
+
+  /** Near-dup pairs (id_a, id_b, hamming), id_a < id_b, among
+    * (media_id, ahash) rows — a detuned or re-leveled copy moves a
+    * handful of Gray-coded bits. */
+  def nearDupPairs(hashes: DataFrame, maxHamming: Int,
+                   maxBucket: Long = 100000L): DataFrame =
+    PerceptualDedup.nearDupPairs(hashes, ahash, maxHamming, maxBucket)
+
+  /** Eval-set DECONTAMINATION: (media_id, contaminated) per corpus clip,
+    * true within `maxHamming` of ANY eval clip. */
+  def decontaminate(corpus: DataFrame, eval: DataFrame, maxHamming: Int,
+                    maxEval: Long = 100000L): DataFrame =
+    PerceptualDedup.decontaminate(corpus, eval, ahash, maxHamming, maxEval)
+
+  /** Near-dup clusters: (media_id, cluster_id), singletons their own. */
+  def clusters(media: DataFrame, maxHamming: Int,
+               maxBucket: Long = 100000L): DataFrame =
+    PerceptualDedup.clusters(media, ahash, maxHamming, maxBucket)
+
+  /** SHIFT-TOLERANT pairs: clips sharing >= `minShared` near-identical
+    * windows (trimmed and silence-padded copies) — (id_a, id_b, shared),
+    * id_a < id_b. */
   def sharedWindowPairs(media: DataFrame, windowFrames: Int,
                         hopFrames: Int, maxHamming: Int,
                         minShared: Int = 2, maxBucket: Long = 100000L,
-                        silenceFloor: Long = 100L): DataFrame = {
-    val w = hashWindows(media, windowFrames, hopFrames, silenceFloor)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    w.count(): Unit // ONE decode per clip
-    try {
-      val out = windowEdges(w, maxHamming, minShared, maxBucket)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      out.count(): Unit
-      out
-    } finally { w.unpersist(); () }
-  }
+                        silenceFloor: Long = 100L): DataFrame =
+    PerceptualDedup.sharedPairs(media,
+      windows(windowFrames, hopFrames, silenceFloor), maxHamming, minShared,
+      maxBucket)
 
-  /** SHIFT-TOLERANT decontamination — the window-level eval leak guard:
-    * flag every corpus clip sharing at least `minShared` near-identical
-    * (within `maxHamming`) WINDOWS with any single eval clip, so a
-    * TRIMMED or silence-PADDED copy of benchmark audio is still caught.
-    * The whole-clip probe ([[decontaminate]]) cannot see this class: its
-    * 8 fingerprint segments span the clip, so a shift re-buckets every
-    * one of them; hop-aligned window hashes re-align exactly — the audio
-    * face of [[VideoDedup.decontaminateFrames]]. Eval clips hash through
-    * the same window pass and BROADCAST as bands; corpus windows never
-    * shuffle (only band-matched candidates reach the per-(clip, eval)
-    * shared-window count). One PCM decode per clip per side per job.
-    * Output (media_id, contaminated) for EVERY corpus clip — an
-    * all-silent clip hashes no windows and reports false; PERSISTED,
-    * unpersist once consumed. */
+  /** SHIFT-TOLERANT decontamination: a corpus clip flags when it shares
+    * >= `minShared` near-identical windows with any single eval clip.
+    * (media_id, contaminated) for EVERY corpus clip — an all-silent clip
+    * hashes no windows and reports false. */
   def decontaminateWindows(corpus: DataFrame, eval: DataFrame,
                            windowFrames: Int, hopFrames: Int,
                            maxHamming: Int, minShared: Int = 2,
                            maxEval: Long = 100000L,
-                           silenceFloor: Long = 100L): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 16,
-      s"maxHamming $maxHamming not in [0,16]")
-    require(minShared >= 1, s"minShared=$minShared must be >= 1")
-    val evalW = hashWindows(eval, windowFrames, hopFrames, silenceFloor)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try { // eval unpersists on EVERY exit — a maxEval refusal must not
-      // leak a cache that silently serves the next job's window frame
-      val nEvalWindows = evalW.count() // also materializes: one eval decode
-      require(nEvalWindows <= maxEval,
-        s"eval set hashes $nEvalWindows windows > maxEval=$maxEval — a " +
-          "broadcast this size would flood the executors; raise maxEval " +
-          "deliberately")
-      val corpusW = hashWindows(corpus, windowFrames, hopFrames, silenceFloor)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      corpusW.count(): Unit // ONE decode; the probe reuses the cached frame
-      try {
-        import graft.dedup.HammingBands
-        val hits = HammingBands.explodeBands(
-          corpusW.select(col("media_id"), col("window_idx"),
-            col("whash").as("__hc")), "__hc", maxHamming)
-          .join(broadcast(HammingBands.explodeBands(
-            evalW.select(col("media_id").as("__eval_id"),
-              col("window_idx").as("__eval_w"), col("whash").as("__he")),
-            "__he", maxHamming)), Seq("band", "value"))
-          .filter(bit_count(col("__hc").bitwiseXOR(col("__he"))) <= maxHamming)
-          .groupBy(col("media_id"), col("__eval_id"))
-          .agg(countDistinct(struct(col("window_idx"), col("__eval_w")))
-            .as("shared"))
-          .filter(col("shared") >= minShared)
-          .select("media_id").distinct()
-        val out = corpus.select(col("media_id"))
-          .join(hits.withColumn("contaminated", lit(true)),
-            Seq("media_id"), "left")
-          .select(col("media_id"),
-            coalesce(col("contaminated"), lit(false)).as("contaminated"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        out.count(): Unit
-        out
-      } finally { corpusW.unpersist(); () }
-    } finally { evalW.unpersist(); () }
-  }
+                           silenceFloor: Long = 100L): DataFrame =
+    PerceptualDedup.decontaminateParts(corpus, eval,
+      windows(windowFrames, hopFrames, silenceFloor), maxHamming, minShared,
+      maxEval)
 
-  /** KEEP-LONGEST shift-tolerant dedup: cluster trimmed/padded copies
-    * through the window-overlap edges and keep the member with the most
-    * CONTENT (non-silent) windows per cluster, ties broken on minimum
-    * id — the audio face of [[VideoDedup.survivorsByFrames]]'s keep-best
-    * policy, where a trimmed re-upload loses to the full master. Window
-    * counts come from the SAME persisted window pass as the edges, so
-    * the job still pays exactly one PCM decode per clip. All-silent
-    * clips hash no windows and are dropped (they carry no content to
-    * keep). Output (media_id, n_windows — survivors only), PERSISTED —
-    * unpersist once consumed. */
+  /** KEEP-LONGEST shift-tolerant dedup: per window-overlap cluster the
+    * clip with the most non-silent windows survives (ties on min id) —
+    * a trimmed re-upload loses to the full master. Output (media_id,
+    * n_windows), survivors only; all-silent clips are dropped. */
   def survivorsByWindows(media: DataFrame, windowFrames: Int,
                          hopFrames: Int, maxHamming: Int,
                          minShared: Int = 2, maxBucket: Long = 100000L,
-                         silenceFloor: Long = 100L): DataFrame = {
-    val w = hashWindows(media, windowFrames, hopFrames, silenceFloor)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    w.count(): Unit // ONE decode per clip: edges + counts reuse the cache
-    try {
-      val edges = windowEdges(w, maxHamming, minShared, maxBucket)
-        .select("id_a", "id_b")
-      val perClip = w.groupBy(col("media_id"))
-        .agg(count(lit(1)).as("n_windows"))
-      val out = graft.dedup.DupClusters.survivorsBy(
-        perClip, "media_id", edges, prefer = col("n_windows"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      out.count(): Unit
-      out
-    } finally { w.unpersist(); () }
-  }
+                         silenceFloor: Long = 100L): DataFrame =
+    PerceptualDedup.partSurvivors(media,
+      windows(windowFrames, hopFrames, silenceFloor), "n_windows",
+      maxHamming, minShared, maxBucket)
 
-  /** Shift-tolerant CLUSTERS: connected components over
-    * [[sharedWindowPairs]] edges — trimmed and silence-padded copies
-    * land in their original's cluster. Output (media_id, cluster_id)
-    * for EVERY input clip (all-silent clips hash no windows but still
-    * appear as singletons); PERSISTED — unpersist once consumed. */
+  /** Shift-tolerant clusters over [[sharedWindowPairs]] edges:
+    * (media_id, cluster_id) for EVERY input clip (all-silent clips are
+    * singletons). */
   def shiftClusters(media: DataFrame, windowFrames: Int, hopFrames: Int,
                     maxHamming: Int, minShared: Int = 2,
                     maxBucket: Long = 100000L,
-                    silenceFloor: Long = 100L): DataFrame = {
-    val w = hashWindows(media, windowFrames, hopFrames, silenceFloor)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    w.count(): Unit // ONE decode per clip
-    try {
-      val edges = windowEdges(w, maxHamming, minShared, maxBucket)
-        .select("id_a", "id_b")
-      val out = graft.dedup.DupClusters.resolve(
-        media.select(col("media_id")), "media_id", edges)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      out.count(): Unit
-      out
-    } finally { w.unpersist(); () }
-  }
+                    silenceFloor: Long = 100L): DataFrame =
+    PerceptualDedup.partClusters(media,
+      windows(windowFrames, hopFrames, silenceFloor), maxHamming, minShared,
+      maxBucket, everyInput = true)
 }

@@ -2,27 +2,26 @@ package graft.multimodal
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-import Multimodal.{ImageCodec, MediaRecord}
+import graft.dedup.PerceptualDedup
+import graft.dedup.PerceptualDedup.Fingerprint
+import Multimodal.{ImageCodec, MediaRecord, fingerprintPass}
 
 /** Perceptual image deduplication over REAL pixels: a 64-bit difference
   * hash (dHash) computed from each payload's decoded, 9x8-downscaled
   * grayscale — re-encodes, resizes and format changes that preserve the
   * content map to the same (or nearly the same) hash, so exact dedup is
-  * a hash groupBy and near-dup is Hamming proximity.
+  * a hash groupBy and near-dup is Hamming proximity. Part fingerprints
+  * add the classes the whole-image hash cannot see: per-TILE dHashes
+  * (crops, letterboxing) and the 8 dihedral ORIENTATION dHashes
+  * (rotations, mirrors).
   *
-  * Scale shape mirrors the TEXT near-dup stack (reference compaction +
-  * MinHash banding, `dedup/MinHashDedup.scala`): the hash pass is
-  * map-only (decode confined to mapPartitions, one decoder per
-  * partition); near-dup pairing goes through the shared pigeonhole
-  * banding ([[graft.dedup.HammingBands]] — equi-join on (band, value),
-  * never an all-pairs scan, exact XOR + bit_count verify, degenerate
-  * buckets capped loudly). Every multi-branch face persists the
-  * (media_id, dhash) frame — 16 bytes/row — so each image is DECODED
-  * exactly once per job: at 100 TB of images, ImageIO decode is the
-  * job's dominant cost and any recompute multiplier on it is the
-  * bottleneck.
+  * This object holds the fingerprint kernels and their map-only passes
+  * (decode confined to mapPartitions, one decode per record); every
+  * dedup face is an adapter onto [[graft.dedup.PerceptualDedup]], which
+  * owns the one-decode-per-job caching, the shared banding and the
+  * bounded-broadcast decontamination. Faces returning a frame follow
+  * the [[graft.dedup.Cached]] contract.
   */
 object ImageDedup {
 
@@ -185,448 +184,165 @@ object ImageDedup {
     bits
   }
 
-  /** Map-only ORIENTATION hash pass: 8 rows per image — (media_id,
-    * orient, ohash), one per dihedral orientation — from ONE decode.
-    * Fixed 8x row fanout (128 bytes/image), so banding over it stays a
-    * linear equi-join; the rotation-tolerant analogue of the tile/window
-    * passes' bounded part fanout. */
-  def hashOrientations(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions(_.flatMap { r =>
-      require(r.media_type == "image",
-        s"media_id=${r.media_id}: orientation hashing over ${r.media_type}")
-      val img = ImageCodec.read(r.payload)
-      require(img != null,
-        s"media_id=${r.media_id}: payload is not a decodable image")
-      dHashDihedral(img).iterator.zipWithIndex.map { case (h, o) =>
+  private[multimodal] val dhash =
+    Fingerprint("image", "dhash", "image-dedup", hashImages)
+  private val orientations = Fingerprint("image", "ohash", "image-rotation",
+    hashOrientations, Seq("orient"))
+  private def tiles(tileW: Int, tileH: Int) = Fingerprint("image", "thash",
+    "image-tiles", hashTiles(_, tileW, tileH), Seq("tile_x", "tile_y"))
+
+  private def decode(r: MediaRecord): java.awt.image.BufferedImage = {
+    val img = ImageCodec.read(r.payload)
+    require(img != null,
+      s"media_id=${r.media_id}: payload is not a decodable image")
+    img
+  }
+
+  /** Map-only hash pass: (media_id, dhash), one decode per record. */
+  def hashImages(media: DataFrame): DataFrame =
+    fingerprintPass(media, "image", "media_id", "dhash")(r =>
+      Iterator.single((r.media_id, dHash64(decode(r)))))
+
+  /** Map-only pass emitting the dHash AND the decoded dimensions from ONE
+    * decode: (media_id, dhash, width, height) — the input to
+    * [[survivorsByResolution]], where resolution is the quality signal. */
+  def hashImagesWithDims(media: DataFrame): DataFrame =
+    fingerprintPass(media, "image", "media_id", "dhash", "width", "height")(
+      r => {
+        val img = decode(r)
+        Iterator.single((r.media_id, dHash64(img), img.getWidth,
+          img.getHeight))
+      })
+
+  /** Map-only ORIENTATION pass: 8 rows per image — (media_id, orient,
+    * ohash), one per dihedral orientation — from ONE decode. Fixed 8x
+    * fanout, so banding over it stays a linear equi-join. */
+  def hashOrientations(media: DataFrame): DataFrame =
+    fingerprintPass(media, "image", "media_id", "orient", "ohash")(r =>
+      dHashDihedral(decode(r)).iterator.zipWithIndex.map { case (h, o) =>
         (r.media_id, o, h)
-      }
-    }).toDF("media_id", "orient", "ohash")
-  }
+      })
 
-  /** Map-only CANONICAL hash pass: (media_id, chash) where chash is the
-    * unsigned-minimum of the 8 orientation hashes — identical for every
-    * pixel-exact rotation/mirror of the same content, so EXACT
-    * orientation-invariant dedup is one groupBy. (Near-dup matching must
-    * go through [[hashOrientations]]: noise can flip WHICH orientation
-    * attains the minimum, teleporting the canonical hash.) */
-  def hashCanonical(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions(_.map { r =>
-      require(r.media_type == "image",
-        s"media_id=${r.media_id}: orientation hashing over ${r.media_type}")
-      val img = ImageCodec.read(r.payload)
-      require(img != null,
-        s"media_id=${r.media_id}: payload is not a decodable image")
-      (r.media_id, dHashDihedral(img).reduce((a, b) =>
-        if (java.lang.Long.compareUnsigned(a, b) <= 0) a else b))
-    }).toDF("media_id", "chash")
-  }
+  /** Map-only CANONICAL pass: (media_id, chash), the unsigned minimum of
+    * the 8 orientation hashes — identical for every pixel-exact
+    * rotation/mirror, so EXACT orientation-invariant dedup is one
+    * groupBy. (Near-dup must go through [[hashOrientations]]: noise can
+    * flip WHICH orientation attains the minimum.) */
+  def hashCanonical(media: DataFrame): DataFrame =
+    fingerprintPass(media, "image", "media_id", "chash")(r =>
+      Iterator.single((r.media_id, dHashDihedral(decode(r)).reduce((a, b) =>
+        if (java.lang.Long.compareUnsigned(a, b) <= 0) a else b))))
 
-  /** EXACT rotation/flip-invariant dedup: every image labeled with its
-    * canonical-hash group's representative (min media_id) — the
-    * [[exactGroups]] shape over the orientation-invariant fingerprint. */
-  def canonicalGroups(media: DataFrame): DataFrame =
-    hashCanonical(media).withColumn("group_rep",
-      min(col("media_id")).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("chash"))))
-      .select("media_id", "chash", "group_rep")
-
-  /** ROTATION-TOLERANT near-dup clusters: two images pair when ANY of
-    * their orientation hashes lie within `maxHamming` (a rotated copy's
-    * hash set is a permutation of its base's, so the aligned pair always
-    * exists); connected components label every input. Banding runs over
-    * the 8-rows-per-image orientation frame through the shared
-    * [[graft.dedup.HammingBands]] path — still an equi-join, never
-    * all-pairs. ONE decode per image per job; output (media_id,
-    * cluster_id) is PERSISTED — unpersist once consumed. */
-  def rotationClusters(media: DataFrame, maxHamming: Int,
-                       maxBucket: Long = 100000L): DataFrame = {
-    val h = hashOrientations(media).persist(StorageLevel.MEMORY_AND_DISK)
-    h.count(): Unit // materialize: the decode pass runs exactly once
-    try {
-      val oids = h.select(
-        struct(col("media_id"), col("orient")).as("oid"), col("ohash"))
-      val edges = graft.dedup.HammingBands.pairs(
-        oids, "oid", "ohash", maxHamming, maxBucket, "image-rotation")
-        .select(col("id_a.media_id").as("ia"), col("id_b.media_id").as("ib"))
-        .filter(col("ia") =!= col("ib"))
-        .select(least(col("ia"), col("ib")).as("id_a"),
-          greatest(col("ia"), col("ib")).as("id_b"))
-        .distinct()
-      val out = graft.dedup.DupClusters.resolve(
-        media.select(col("media_id")), "media_id", edges)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      out.count(): Unit
-      out
-    } finally { h.unpersist(); () }
-  }
-
-  /** ROTATION-TOLERANT decontamination: flag every corpus image whose
-    * plain dHash lies within `maxHamming` of ANY ORIENTATION of any eval
-    * image — a rotated or mirrored re-upload of benchmark imagery is
-    * caught without expanding the corpus side at all (ONE hash row per
-    * corpus image; the bounded eval side carries the 8x orientation
-    * fanout and BROADCASTS). Corpus never shuffles. Output (media_id,
-    * contaminated) for every corpus image; PERSISTED — unpersist once
-    * consumed. */
-  def decontaminateRotations(corpus: DataFrame, eval: DataFrame,
-                             maxHamming: Int,
-                             maxEval: Long = 100000L): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 16,
-      s"maxHamming $maxHamming not in [0,16]")
-    val evalH = hashOrientations(eval)
-      .select(col("media_id"), col("ohash").as("dhash"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try { // eval unpersists on EVERY exit — a maxEval refusal must not
-      // leak a cache that silently serves the next job's hash frame
-      val nEvalRows = evalH.count() // also materializes: eval decodes once
-      require(nEvalRows <= maxEval,
-        s"eval set hashes $nEvalRows orientation rows > maxEval=$maxEval — " +
-          "a broadcast this size would flood the executors; raise maxEval " +
-          "deliberately")
-      val corpusH = hashImages(corpus).persist(StorageLevel.MEMORY_AND_DISK)
-      corpusH.count(): Unit
-      try {
-        val out = graft.dedup.HammingBands.decontaminateProbe(
-          corpusH, evalH, "media_id", "dhash", maxHamming)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        out.count(): Unit
-        out
-      } finally { corpusH.unpersist(); () }
-    } finally { evalH.unpersist(); () }
-  }
-
-  /** Map-only hash pass: (media_id, dhash) with one decode per record,
-    * decoder machinery initialized per partition. Non-image or
-    * undecodable payloads refuse loudly — a silently skipped image is a
-    * duplicate that survives. */
-  def hashImages(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions(_.map { r =>
-      require(r.media_type == "image",
-        s"media_id=${r.media_id}: dHash is an IMAGE hash (got ${r.media_type})")
-      val img = ImageCodec.read(r.payload)
-      require(img != null,
-        s"media_id=${r.media_id}: payload is not a decodable image")
-      (r.media_id, dHash64(img))
-    }).toDF("media_id", "dhash")
-  }
-
-  /** Map-only pass emitting the perceptual hash AND the real decoded
-    * dimensions in ONE decode — the input to quality-aware survivor
-    * selection ([[survivorsByResolution]]), where resolution is the
-    * quality signal and paying a second decode for it would double the
-    * job's dominant cost. */
-  def hashImagesWithDims(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions(_.map { r =>
-      require(r.media_type == "image",
-        s"media_id=${r.media_id}: dHash is an IMAGE hash (got ${r.media_type})")
-      val img = ImageCodec.read(r.payload)
-      require(img != null,
-        s"media_id=${r.media_id}: payload is not a decodable image")
-      (r.media_id, dHash64(img), img.getWidth, img.getHeight)
-    }).toDF("media_id", "dhash", "width", "height")
-  }
-
-  /** KEEP-BEST near-dup dedup: cluster perceptual near-duplicates (a
-    * bilinear downscale of an image dHashes within a couple of bits of
-    * the original) and keep the HIGHEST-RESOLUTION member per cluster
-    * (decoded width x height, ties broken on minimum id) — the
-    * keep-best-copy policy of crawl dedup, where thumbnails and
-    * re-encodes lose to the original asset. One decode per image per job
-    * (hash and dims come from the same pass); the returned frame
-    * (media_id, dhash, width, height — survivors only) is PERSISTED,
-    * unpersist once consumed. */
-  def survivorsByResolution(media: DataFrame, maxHamming: Int,
-                            maxBucket: Long = 100000L): DataFrame = {
-    val h = hashImagesWithDims(media).persist(StorageLevel.MEMORY_AND_DISK)
-    h.count(): Unit // materialize: the decode pass runs exactly once
-    try {
-      val pairs = graft.dedup.HammingBands.pairs(
-        h.select(col("media_id"), col("dhash")),
-        "media_id", "dhash", maxHamming, maxBucket, "image-dedup")
-        .select(col("id_a"), col("id_b"))
-      val out = graft.dedup.DupClusters.survivorsBy(
-        h, "media_id", pairs,
-        prefer = col("width").cast("long") * col("height"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      out.count(): Unit
-      out
-    } finally { h.unpersist(); () }
-  }
-
-  /** Exact perceptual dedup: every image labeled with its group's
-    * representative (min media_id sharing the hash) — one hash shuffle,
-    * the compaction-dedup shape over content instead of keys. */
-  def exactGroups(media: DataFrame): DataFrame = {
-    val h = hashImages(media)
-    h.withColumn("group_rep",
-      min(col("media_id")).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("dhash"))))
-      .select("media_id", "dhash", "group_rep")
-  }
-
-  /** Near-duplicate pairs among (media_id, dhash) rows: banded candidate
-    * generation + exact Hamming verify through the shared
-    * [[graft.dedup.HammingBands]] path. Output (id_a, id_b, hamming),
-    * id_a < id_b, each pair once. `maxBucket` caps a band bucket's
-    * size — a bucket past it is shed LOUDLY (constant-content corpora
-    * would otherwise quadratically explode one bucket; shed pairs are
-    * exact-duplicates of each other anyway whenever the full hash
-    * matches, which [[exactGroups]] already handles).
-    *
-    * The hash lineage (a full decode pass when `hashes` comes straight
-    * off [[hashImages]]) feeds the shed census AND both join sides, so it
-    * is persisted and materialized here — each image decodes exactly ONCE
-    * per job; at 100 TB of images decode IS the job's cost. The returned
-    * frame is PERSISTED (pairs are a vanishing fraction of corpus size);
-    * unpersist it once consumed, same contract as
-    * [[graft.dedup.DupClusters.connectedComponents]]. */
-  def nearDupPairs(hashes: DataFrame, maxHamming: Int,
-                   maxBucket: Long = 100000L): DataFrame = {
-    val h = hashes.persist(StorageLevel.MEMORY_AND_DISK)
-    h.count(): Unit // materialize: the decode pass runs exactly once
-    val pairs = graft.dedup.HammingBands.pairs(
-      h, "media_id", "dhash", maxHamming, maxBucket, "image-dedup")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    pairs.count(): Unit // pin the (tiny) pairs, then release the hashes
-    h.unpersist()
-    pairs
-  }
-
-  /** INCREMENTAL image dedup — the image face of
-    * [[graft.dedup.IncrementalDedup]]: admit only batch images whose
-    * perceptual hash was never committed, at O(batch) cost (Bloom
-    * prefilter over the committed store, exact anti-join only for the
-    * positives). The committed store is one string column `h` holding
-    * prior dHashes (`survivors` output's `content_hash`); within-batch
-    * duplicates collapse to the min media_id. The decode+hash pass is
-    * map-only; nothing about the committed corpus is re-read beyond the
-    * sketch build. */
-  def incrementalSurvivors(batch: DataFrame, committedHashes: DataFrame,
-                           fpp: Double = 0.01): DataFrame =
-    graft.dedup.IncrementalDedup.survivors(
-      hashImages(batch), committedHashes, "media_id",
-      col("dhash").cast("string"), fpp)
-
-  /** Image DECONTAMINATION — the image face of the n-gram/semantic eval
-    * decontamination pass: flag every corpus image whose perceptual hash
-    * lies within `maxHamming` of ANY eval image, so benchmark imagery
-    * (and its re-encoded/brightness-shifted near-copies) never leaks
-    * into training data. The eval set is bounded (`maxEval`, refused
-    * loudly past it) and BROADCAST — the corpus never shuffles: one
-    * map-only hash pass, one broadcast band join, exact bit_count
-    * verify. Output: every corpus row's (media_id, contaminated). */
-  def decontaminate(corpus: DataFrame, eval: DataFrame, maxHamming: Int,
-                    maxEval: Long = 100000L): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 16,
-      s"maxHamming $maxHamming not in [0,16]")
-    val evalHashes = hashImages(eval).persist(StorageLevel.MEMORY_AND_DISK)
-    try { // eval unpersists on EVERY exit — a maxEval refusal must not
-      // leak a cache that silently serves the next job's hash frame
-      val nEval = evalHashes.count() // also materializes: eval decodes once
-      require(nEval <= maxEval,
-        s"eval set has $nEval images > maxEval=$maxEval — a broadcast this " +
-          "size would flood the executors; raise maxEval deliberately")
-      // the corpus hash frame feeds the probe join AND the outcome join —
-      // persist so the corpus decode pass runs exactly once per job
-      val corpusHashes = hashImages(corpus)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      corpusHashes.count(): Unit
-      try {
-        val out = graft.dedup.HammingBands.decontaminateProbe(
-          corpusHashes, evalHashes, "media_id", "dhash", maxHamming)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        out.count(): Unit // one flag per corpus row — tiny; unpersist once consumed
-        out
-      } finally { corpusHashes.unpersist(); () }
-    } finally { evalHashes.unpersist(); () }
-  }
-
-  /** Near-dup clusters over a media table: hash, pair, resolve connected
-    * components ([[graft.dedup.DupClusters.resolve]] — same star
-    * contraction as the text dedup path). Output (media_id, cluster_id),
-    * singletons their own cluster. The hash frame feeds the pairing AND
-    * the vertex side of the resolve, so it is persisted here — one decode
-    * per image per job — and the (tiny) labeled output is materialized
-    * before the hash cache is released; unpersist it once consumed. */
-  def clusters(media: DataFrame, maxHamming: Int,
-               maxBucket: Long = 100000L): DataFrame = {
-    val h = hashImages(media).persist(StorageLevel.MEMORY_AND_DISK)
-    h.count(): Unit // materialize: the decode pass runs exactly once
-    try {
-      val pairs = graft.dedup.HammingBands.pairs(
-        h, "media_id", "dhash", maxHamming, maxBucket, "image-dedup")
-        .select(col("id_a"), col("id_b"))
-      val out = graft.dedup.DupClusters.resolve(
-        h.select(col("media_id")), "media_id", pairs)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      out.count(): Unit
-      out
-    } finally { h.unpersist(); () }
-  }
-
-  /** Map-only TILE hash pass — the CROP-TOLERANT fingerprint: one row
-    * per full tileW x tileH tile, (media_id, tile_x, tile_y, thash),
-    * thash = the tile's own dHash. A whole-image dHash moves almost
-    * every bit when an image is CROPPED or letterboxed (the 9x8
-    * downscale grid shifts under every cell), so cropped re-uploads
-    * land far away; tile hashes re-align after any tile-multiple crop —
-    * the image face of [[AudioDedup.hashWindows]]' hop-multiple
-    * contract (arbitrary-offset crops would need hashing at multiple
-    * offsets, exactly as sub-hop audio shifts would). Partial edge
-    * tiles are skipped (their geometry differs from every aligned
-    * tile's). ONE decode per image per job; tiles hash from subimage
-    * VIEWS of the single decoded frame. */
+  /** Map-only TILE pass — the CROP-TOLERANT fingerprint: (media_id,
+    * tile_x, tile_y, thash), one row per full tileW x tileH tile. Tile
+    * hashes re-align after any tile-multiple crop, where the whole-image
+    * downscale grid shifts under every cell; partial edge tiles are
+    * skipped. One decode, one luminance plane for every tile. */
   def hashTiles(media: DataFrame, tileW: Int, tileH: Int): DataFrame = {
     require(tileW >= 8 && tileH >= 8,
       s"tile ${tileW}x$tileH too small for a stable per-tile dHash " +
         "(9x8 downscale needs >= 8px sides)")
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions(_.flatMap { r =>
-      require(r.media_type == "image",
-        s"media_id=${r.media_id}: tile hashing over ${r.media_type}")
-      val img = ImageCodec.read(r.payload)
-      require(img != null,
-        s"media_id=${r.media_id}: payload is not a decodable image")
+    fingerprintPass(media, "image", "media_id", "tile_x", "tile_y",
+      "thash") { r =>
+      val img = decode(r)
       val w = img.getWidth
-      val nx = w / tileW
-      val ny = img.getHeight / tileH
-      val lum = Pixels.lumaPlane(img) // one plane serves every tile
+      val lum = Pixels.lumaPlane(img)
       for {
-        ty <- Iterator.range(0, ny)
-        tx <- Iterator.range(0, nx)
+        ty <- Iterator.range(0, img.getHeight / tileH)
+        tx <- Iterator.range(0, w / tileW)
       } yield (r.media_id, tx, ty,
         dHashOfLumaRect(lum, w, tx * tileW, ty * tileH, tileW, tileH))
-    }).toDF("media_id", "tile_x", "tile_y", "thash")
+    }
   }
 
-  /** Tile-overlap edges: banded tile pairing over a (media_id, tile_x,
-    * tile_y) struct key, aggregated to image pairs with >= minShared
-    * distinct matching tile pairs — the same shape as the video
-    * frame-overlap and audio window-overlap faces. */
-  private def tileEdges(tiles: DataFrame, maxHamming: Int,
-                        minShared: Int, maxBucket: Long): DataFrame = {
-    require(minShared >= 1, s"minShared=$minShared must be >= 1")
-    val tids = tiles.select(
-      struct(col("media_id"), col("tile_x"), col("tile_y")).as("tid"),
-      col("thash"))
-    graft.dedup.HammingBands.pairs(
-      tids, "tid", "thash", maxHamming, maxBucket, "image-tiles")
-      .select(col("id_a.media_id").as("ia"), col("id_b.media_id").as("ib"),
-        col("id_a"), col("id_b"))
-      .filter(col("ia") =!= col("ib"))
-      .select(least(col("ia"), col("ib")).as("id_a"),
-        greatest(col("ia"), col("ib")).as("id_b"),
-        col("id_a").as("ta"), col("id_b").as("tb"))
-      .groupBy("id_a", "id_b")
-      .agg(countDistinct(struct(col("ta"), col("tb"))).as("shared"))
-      .filter(col("shared") >= minShared)
-  }
+  /** Exact dedup: (media_id, dhash, group_rep), group_rep = min media_id
+    * sharing the hash. */
+  def exactGroups(media: DataFrame): DataFrame =
+    PerceptualDedup.exactGroups(media, dhash)
 
-  /** CROP-TOLERANT near-dup pairs: images sharing at least `minShared`
-    * near-identical tiles — the duplicate class the whole-image dHash
-    * cannot see (a cropped or border-extended copy shifts the 9x8
-    * downscale under every cell, but its surviving tiles are
-    * pixel-identical to the original's). Output (id_a, id_b, shared),
-    * id_a < id_b; PERSISTED — unpersist once consumed. */
+  /** EXACT rotation/flip-invariant dedup: [[exactGroups]] over the
+    * canonical hash — (media_id, chash, group_rep). */
+  def canonicalGroups(media: DataFrame): DataFrame =
+    PerceptualDedup.exactGroups(media,
+      Fingerprint("image", "chash", "image-canonical", hashCanonical))
+
+  /** Near-dup pairs (id_a, id_b, hamming), id_a < id_b, among
+    * (media_id, dhash) rows. `maxBucket` caps a band bucket (shed
+    * loudly). */
+  def nearDupPairs(hashes: DataFrame, maxHamming: Int,
+                   maxBucket: Long = 100000L): DataFrame =
+    PerceptualDedup.nearDupPairs(hashes, dhash, maxHamming, maxBucket)
+
+  /** Near-dup clusters: (media_id, cluster_id), singletons their own. */
+  def clusters(media: DataFrame, maxHamming: Int,
+               maxBucket: Long = 100000L): DataFrame =
+    PerceptualDedup.clusters(media, dhash, maxHamming, maxBucket)
+
+  /** KEEP-BEST dedup: per near-dup cluster the HIGHEST-RESOLUTION member
+    * (width x height, ties on min id) survives — thumbnails and
+    * re-encodes lose to the original. Output (media_id, dhash, width,
+    * height), survivors only. */
+  def survivorsByResolution(media: DataFrame, maxHamming: Int,
+                            maxBucket: Long = 100000L): DataFrame =
+    PerceptualDedup.survivors(media, dhash.copy(pass = hashImagesWithDims),
+      col("width").cast("long") * col("height"), maxHamming, maxBucket)
+
+  /** O(batch) admission of images whose dHash was never committed
+    * (`survivors` output's `content_hash` store, one string column `h`). */
+  def incrementalSurvivors(batch: DataFrame, committedHashes: DataFrame,
+                           fpp: Double = 0.01): DataFrame =
+    PerceptualDedup.incrementalSurvivors(batch, committedHashes, dhash, fpp)
+
+  /** Eval-set DECONTAMINATION: (media_id, contaminated) per corpus image,
+    * true within `maxHamming` of ANY eval image (re-encoded and
+    * brightness-shifted benchmark copies included). */
+  def decontaminate(corpus: DataFrame, eval: DataFrame, maxHamming: Int,
+                    maxEval: Long = 100000L): DataFrame =
+    PerceptualDedup.decontaminate(corpus, eval, dhash, maxHamming, maxEval)
+
+  /** ROTATION-TOLERANT clusters: two images pair when ANY of their
+    * orientation hashes lie within `maxHamming` (a rotated copy's hash
+    * set is a permutation of its base's). (media_id, cluster_id) for
+    * every input image. */
+  def rotationClusters(media: DataFrame, maxHamming: Int,
+                       maxBucket: Long = 100000L): DataFrame =
+    PerceptualDedup.partClusters(media, orientations, maxHamming,
+      minShared = 1, maxBucket, everyInput = true)
+
+  /** ROTATION-TOLERANT decontamination: a corpus image flags when its
+    * plain dHash lies within `maxHamming` of ANY orientation of any eval
+    * image — the bounded eval side carries the 8x fanout, the corpus one
+    * hash row per image. */
+  def decontaminateRotations(corpus: DataFrame, eval: DataFrame,
+                             maxHamming: Int,
+                             maxEval: Long = 100000L): DataFrame =
+    PerceptualDedup.decontaminate(corpus, eval, dhash, maxHamming, maxEval,
+      evalFp = Some(orientations))
+
+  /** CROP-TOLERANT pairs: images sharing >= `minShared` near-identical
+    * tiles — (id_a, id_b, shared), id_a < id_b. */
   def sharedTilePairs(media: DataFrame, tileW: Int, tileH: Int,
                       maxHamming: Int, minShared: Int = 2,
-                      maxBucket: Long = 100000L): DataFrame = {
-    val t = hashTiles(media, tileW, tileH)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    t.count(): Unit // ONE decode per image
-    try {
-      val out = tileEdges(t, maxHamming, minShared, maxBucket)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      out.count(): Unit
-      out
-    } finally { t.unpersist(); () }
-  }
+                      maxBucket: Long = 100000L): DataFrame =
+    PerceptualDedup.sharedPairs(media, tiles(tileW, tileH), maxHamming,
+      minShared, maxBucket)
 
-  /** Crop-tolerant CLUSTERS: connected components over
-    * [[sharedTilePairs]] edges — cropped and border-extended copies
-    * land in their original's cluster. Output (media_id, cluster_id)
-    * for EVERY input image (an image smaller than one tile hashes no
-    * tiles but still appears as a singleton); PERSISTED — unpersist
-    * once consumed. */
+  /** Crop-tolerant clusters over [[sharedTilePairs]] edges: (media_id,
+    * cluster_id) for EVERY input image (one smaller than a tile is a
+    * singleton). */
   def cropClusters(media: DataFrame, tileW: Int, tileH: Int,
                    maxHamming: Int, minShared: Int = 2,
-                   maxBucket: Long = 100000L): DataFrame = {
-    val t = hashTiles(media, tileW, tileH)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    t.count(): Unit // ONE decode per image
-    try {
-      val edges = tileEdges(t, maxHamming, minShared, maxBucket)
-        .select("id_a", "id_b")
-      val out = graft.dedup.DupClusters.resolve(
-        media.select(col("media_id")), "media_id", edges)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      out.count(): Unit
-      out
-    } finally { t.unpersist(); () }
-  }
+                   maxBucket: Long = 100000L): DataFrame =
+    PerceptualDedup.partClusters(media, tiles(tileW, tileH), maxHamming,
+      minShared, maxBucket, everyInput = true)
 
-  /** CROP-TOLERANT decontamination — flag every corpus image sharing at
-    * least `minShared` near-identical tiles with any single eval image,
-    * so a CROPPED copy of benchmark imagery is still caught (the
-    * whole-image probe's downscale grid shifts under a crop and sees
-    * nothing). Eval tiles BROADCAST as bands; corpus tiles never
-    * shuffle (only band-matched candidates reach the per-(image, eval)
-    * shared-tile count). One decode per image per side. Output
-    * (media_id, contaminated) for EVERY corpus image; PERSISTED —
-    * unpersist once consumed. */
+  /** CROP-TOLERANT decontamination: a corpus image flags when it shares
+    * >= `minShared` near-identical tiles with any single eval image.
+    * (media_id, contaminated) for EVERY corpus image. */
   def decontaminateTiles(corpus: DataFrame, eval: DataFrame,
                          tileW: Int, tileH: Int, maxHamming: Int,
                          minShared: Int = 2,
-                         maxEval: Long = 100000L): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 16,
-      s"maxHamming $maxHamming not in [0,16]")
-    require(minShared >= 1, s"minShared=$minShared must be >= 1")
-    val evalT = hashTiles(eval, tileW, tileH)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try { // eval unpersists on EVERY exit — a maxEval refusal must not
-      // leak a cache that silently serves the next job's tile frame
-      val nEvalTiles = evalT.count() // also materializes: one eval decode
-      require(nEvalTiles <= maxEval,
-        s"eval set hashes $nEvalTiles tiles > maxEval=$maxEval — a " +
-          "broadcast this size would flood the executors; raise maxEval " +
-          "deliberately")
-      val corpusT = hashTiles(corpus, tileW, tileH)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      corpusT.count(): Unit // ONE decode; the probe reuses the cache
-      try {
-        import graft.dedup.HammingBands
-        val hits = HammingBands.explodeBands(
-          corpusT.select(col("media_id"),
-            struct(col("tile_x"), col("tile_y")).as("__t"),
-            col("thash").as("__hc")), "__hc", maxHamming)
-          .join(broadcast(HammingBands.explodeBands(
-            evalT.select(col("media_id").as("__eval_id"),
-              struct(col("tile_x"), col("tile_y")).as("__et"),
-              col("thash").as("__he")), "__he", maxHamming)),
-            Seq("band", "value"))
-          .filter(bit_count(col("__hc").bitwiseXOR(col("__he"))) <= maxHamming)
-          .groupBy(col("media_id"), col("__eval_id"))
-          .agg(countDistinct(struct(col("__t"), col("__et"))).as("shared"))
-          .filter(col("shared") >= minShared)
-          .select("media_id").distinct()
-        val out = corpus.select(col("media_id"))
-          .join(hits.withColumn("contaminated", lit(true)),
-            Seq("media_id"), "left")
-          .select(col("media_id"),
-            coalesce(col("contaminated"), lit(false)).as("contaminated"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        out.count(): Unit
-        out
-      } finally { corpusT.unpersist(); () }
-    } finally { evalT.unpersist(); () }
-  }
+                         maxEval: Long = 100000L): DataFrame =
+    PerceptualDedup.decontaminateParts(corpus, eval, tiles(tileW, tileH),
+      maxHamming, minShared, maxEval)
 }

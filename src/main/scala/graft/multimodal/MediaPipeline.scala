@@ -2,8 +2,8 @@ package graft.multimodal
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
+import graft.dedup.{Cached, PerceptualDedup}
 import Multimodal.{ImageCodec, MediaCounters, MediaRecord}
 
 /** The COMPOSED media curation pipeline — the media face of the text
@@ -119,55 +119,57 @@ object MediaPipeline {
     * `contaminated` (survived dedup but lies within `maxHamming` of an
     * eval record), or `kept`. Eval records profile through the SAME
     * one-decode pass (only their hashes are used) and broadcast as
-    * bands per modality. Output (media_id, media_type, stage),
-    * PERSISTED — unpersist once consumed. One decode per corpus record
+    * bands per modality. Output (media_id, media_type, stage), under
+    * the [[graft.dedup.Cached]] contract. One decode per corpus record
     * and one per eval record, across ALL stages. */
   def curate(media: DataFrame, eval: DataFrame, maxHamming: Int,
              maxBucket: Long = 100000L, maxEval: Long = 100000L,
-             every: Int = 1): DataFrame = {
-    val prof = profile(media, every = every)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+             every: Int = 1): DataFrame = Cached.scope { s =>
+    val prof = s.hold(profile(media, every = every))
     prof.count(): Unit // ONE decode per corpus record, all stages reuse
-    val evalProf = profile(eval, every = every)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nEval = evalProf.count() // ONE decode per eval record
-      require(nEval <= maxEval,
-        s"eval set has $nEval records > maxEval=$maxEval — a broadcast " +
-          "this size would flood the executors; raise maxEval deliberately")
-      val stages = Seq("image", "audio", "video").map { m =>
-        val p = prof.filter(col("media_type") === m)
-        val gatedIn = p.filter(col("passes"))
-        val pairs = graft.dedup.HammingBands.pairs(
-          gatedIn.select(col("media_id"), col("chash")),
-          "media_id", "chash", maxHamming, maxBucket, s"media-pipeline-$m")
-          .select(col("id_a"), col("id_b"))
-        val surv = graft.dedup.DupClusters.survivorsBy(
-          gatedIn.select(col("media_id"), col("chash"), col("prefer")),
-          "media_id", pairs, prefer = col("prefer"))
-        val flagged = graft.dedup.HammingBands.decontaminateProbe(
-          surv.select(col("media_id"), col("chash")),
-          evalProf.filter(col("media_type") === m)
-            .select(col("media_id"), col("chash")),
-          "media_id", "chash", maxHamming)
-        p.select(col("media_id"), col("media_type"), col("passes"))
-          .join(surv.select(col("media_id"), lit(true).as("__surv")),
-            Seq("media_id"), "left")
-          .join(flagged.filter(col("contaminated"))
-            .select(col("media_id"), lit(true).as("__cont")),
-            Seq("media_id"), "left")
-          .select(col("media_id"), col("media_type"),
-            when(!col("passes"), lit("gated"))
-              .when(col("__surv").isNull, lit("dup_dropped"))
-              .when(col("__cont").isNotNull, lit("contaminated"))
-              .otherwise(lit("kept")).as("stage"))
-      }
-      val out = stages.reduce(_ unionByName _)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      out.count(): Unit
-      out
-    } finally { prof.unpersist(); evalProf.unpersist(); () }
+    val evalProf = s.hold(profile(eval, every = every))
+    val nEval = evalProf.count() // ONE decode per eval record
+    require(nEval <= maxEval,
+      s"eval set has $nEval records > maxEval=$maxEval — a broadcast " +
+        "this size would flood the executors; raise maxEval deliberately")
+    val stages = Seq("image", "audio", "video").map { m =>
+      val p = prof.filter(col("media_type") === m)
+      val surv = keepBest(s, p, m, s"media-pipeline-$m", maxHamming,
+        maxBucket)
+      val flagged = graft.dedup.HammingBands.decontaminateProbe(
+        surv.select(col("media_id"), col("chash")),
+        evalProf.filter(col("media_type") === m)
+          .select(col("media_id"), col("chash")),
+        "media_id", "chash", maxHamming)
+      p.select(col("media_id"), col("media_type"), col("passes"))
+        .join(surv.select(col("media_id"), lit(true).as("__surv")),
+          Seq("media_id"), "left")
+        .join(flagged.filter(col("contaminated"))
+          .select(col("media_id"), lit(true).as("__cont")),
+          Seq("media_id"), "left")
+        .select(col("media_id"), col("media_type"),
+          when(!col("passes"), lit("gated"))
+            .when(col("__surv").isNull, lit("dup_dropped"))
+            .when(col("__cont").isNotNull, lit("contaminated"))
+            .otherwise(lit("kept")).as("stage"))
+    }
+    val out = s.hold(stages.reduce(_ unionByName _))
+    out.count(): Unit
+    out
   }
+
+  /** Keep-best whole-hash survivors among the gate-passing rows of one
+    * modality's profile `p` — (media_id, chash, prefer) — the dedup stage
+    * every composed pass shares; cluster state belongs to `s`. */
+  private[multimodal] def keepBest(s: Cached.Scope, p: DataFrame,
+                                   modality: String, tag: String,
+                                   maxHamming: Int,
+                                   maxBucket: Long): DataFrame =
+    PerceptualDedup.survivorsOf(s,
+      p.filter(col("passes"))
+        .select(col("media_id"), col("chash"), col("prefer")),
+      PerceptualDedup.Fingerprint(modality, "chash", tag, identity),
+      col("prefer"), maxHamming, maxBucket)
 
   /** The composed run's data card: records per (modality, stage) — what
     * a curation run reports next to [[MediaReport.card]]'s corpus view.
@@ -319,22 +321,20 @@ object MediaPipeline {
     * Eval parts and orientations BROADCAST as bands per modality; corpus
     * parts never shuffle (only band-matched candidates reach the shared
     * count) and the corpus orientation side is its single whole hash.
-    * Output (media_id, media_type, stage), PERSISTED — unpersist once
-    * consumed. */
+    * Output (media_id, media_type, stage). */
   def curateDeep(media: DataFrame, eval: DataFrame, maxHamming: Int,
                  minShared: Int = 2, tileW: Int = 16, tileH: Int = 16,
                  windowFrames: Int = 400, hopFrames: Int = 400,
                  maxBucket: Long = 100000L, maxEval: Long = 100000L,
                  every: Int = 1): DataFrame = {
     require(minShared >= 1, s"minShared=$minShared must be >= 1")
-    val prof = profileDeep(media, tileW = tileW, tileH = tileH,
-      windowFrames = windowFrames, hopFrames = hopFrames, every = every)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    prof.count(): Unit // ONE decode per corpus record, all stages reuse
-    val evalProf = profileDeep(eval, tileW = tileW, tileH = tileH,
-      windowFrames = windowFrames, hopFrames = hopFrames, every = every)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    Cached.scope { s =>
+      val prof = s.hold(profileDeep(media, tileW = tileW, tileH = tileH,
+        windowFrames = windowFrames, hopFrames = hopFrames, every = every))
+      prof.count(): Unit // ONE decode per corpus record, all stages reuse
+      val evalProf = s.hold(profileDeep(eval, tileW = tileW,
+        tileH = tileH, windowFrames = windowFrames, hopFrames = hopFrames,
+        every = every))
       evalProf.count(): Unit // ONE decode per eval record
       val nEvalParts = evalProf.select(explode(col("parts"))).count() +
         evalProf.select(explode(col("orients"))).count()
@@ -344,14 +344,8 @@ object MediaPipeline {
           "executors; raise maxEval deliberately")
       val stages = Seq("image", "audio", "video").map { m =>
         val p = prof.filter(col("media_type") === m)
-        val gatedIn = p.filter(col("passes"))
-        val pairs = graft.dedup.HammingBands.pairs(
-          gatedIn.select(col("media_id"), col("chash")),
-          "media_id", "chash", maxHamming, maxBucket, s"media-deep-$m")
-          .select(col("id_a"), col("id_b"))
-        val surv = graft.dedup.DupClusters.survivorsBy(
-          gatedIn.select(col("media_id"), col("chash"), col("prefer")),
-          "media_id", pairs, prefer = col("prefer"))
+        val surv = keepBest(s, p, m, s"media-deep-$m", maxHamming,
+          maxBucket)
         val flagged = deepLeakFlags(p, surv, evalProf, m,
           maxHamming, minShared)
         p.select(col("media_id"), col("media_type"), col("passes"))
@@ -365,11 +359,10 @@ object MediaPipeline {
               .when(col("__cont").isNotNull, lit("contaminated"))
               .otherwise(lit("kept")).as("stage"))
       }
-      val out = stages.reduce(_ unionByName _)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val out = s.hold(stages.reduce(_ unionByName _))
       out.count(): Unit
       out
-    } finally { prof.unpersist(); evalProf.unpersist(); () }
+    }
   }
 
   /** The DEEP leak probe shared by [[curateDeep]] and
@@ -388,28 +381,16 @@ object MediaPipeline {
                                         minShared: Int): DataFrame = {
     import graft.dedup.HammingBands
     // PART-level leak probe: survivor parts vs broadcast eval parts
+    val key = struct(col("__p._1").as("kx"), col("__p._2").as("ky"))
     val survParts = p.join(
       surv.select(col("media_id")), Seq("media_id"), "left_semi")
       .select(col("media_id"), explode(col("parts")).as("__p"))
-      .select(col("media_id"),
-        struct(col("__p._1").as("kx"), col("__p._2").as("ky")).as("__k"),
-        col("__p._3").as("__hc"))
+      .select(col("media_id"), key, col("__p._3"))
     val evalParts = evalProf.filter(col("media_type") === m)
-      .select(col("media_id").as("__eval_id"),
-        explode(col("parts")).as("__p"))
-      .select(col("__eval_id"),
-        struct(col("__p._1").as("kx"), col("__p._2").as("ky")).as("__ek"),
-        col("__p._3").as("__he"))
-    val partFlagged =
-      HammingBands.explodeBands(survParts, "__hc", maxHamming)
-      .join(broadcast(
-        HammingBands.explodeBands(evalParts, "__he", maxHamming)),
-        Seq("band", "value"))
-      .filter(bit_count(col("__hc").bitwiseXOR(col("__he"))) <= maxHamming)
-      .groupBy(col("media_id"), col("__eval_id"))
-      .agg(countDistinct(struct(col("__k"), col("__ek"))).as("shared"))
-      .filter(col("shared") >= minShared)
-      .select("media_id").distinct()
+      .select(col("media_id"), explode(col("parts")).as("__p"))
+      .select(col("media_id"), key, col("__p._3"))
+    val partFlagged = PerceptualDedup.sharedPartHits(survParts, evalParts,
+      maxHamming, minShared)
     // ROTATION leak probe (images): survivor whole hash vs the
     // broadcast eval 8-orientation fanout — one hash row per corpus
     // survivor, the eval side carries the 8x expansion

@@ -3,6 +3,8 @@ package graft.multimodal
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.dedup.Cached
+
 /** Leakage-safe train/val/test splitting for MEDIA corpora — the
   * multimodal face of [[graft.text.LeakSafeSplit]]: a per-item hash
   * split puts a benchmark image and its re-encoded near-copy on opposite
@@ -26,8 +28,7 @@ object MediaSplit {
     * holding all three media types in one pass ([[MediaPipeline.profile]]
     * switches codecs per record, so the payload column scans once) —
     * pairing still runs WITHIN each modality (an image dHash and an
-    * audio fingerprint colliding numerically must never merge). The
-    * returned frame is PERSISTED — unpersist once consumed. */
+    * audio fingerprint colliding numerically must never merge). */
   private def pairsFor(media: DataFrame, modality: String,
                        maxHamming: Int): DataFrame = modality match {
     case "image" =>
@@ -36,22 +37,19 @@ object MediaSplit {
       AudioDedup.nearDupPairs(AudioDedup.hashAudio(media), maxHamming)
     case "video" =>
       VideoDedup.nearDupPairs(VideoDedup.hashVideos(media), maxHamming)
-    case "mixed" =>
-      val prof = MediaPipeline.profile(media)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    case "mixed" => Cached.scope { s =>
+      val prof = s.hold(MediaPipeline.profile(media))
       prof.count(): Unit // ONE decode per record, whatever the modality
-      try {
-        val pairs = Seq("image", "audio", "video").map { m =>
-          graft.dedup.HammingBands.pairs(
-            prof.filter(col("media_type") === m)
-              .select(col("media_id"), col("chash")),
-            "media_id", "chash", maxHamming, 100000L, s"media-split-$m")
-            .select(col("id_a"), col("id_b"), col("hamming"))
-        }.reduce(_ unionByName _)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        pairs.count(): Unit
-        pairs
-      } finally { prof.unpersist(); () }
+      val pairs = s.hold(Seq("image", "audio", "video").map { m =>
+        graft.dedup.HammingBands.pairs(
+          prof.filter(col("media_type") === m)
+            .select(col("media_id"), col("chash")),
+          "media_id", "chash", maxHamming, 100000L, s"media-split-$m")
+          .select(col("id_a"), col("id_b"), col("hamming"))
+      }.reduce(_ unionByName _))
+      pairs.count(): Unit
+      pairs
+    }
     case other => throw new IllegalArgumentException(
       s"modality must be image|audio|video|mixed, got '$other'")
   }
@@ -67,12 +65,11 @@ object MediaSplit {
   def byPerceptualCluster(media: DataFrame, modality: String,
                           maxHamming: Int, bands: Seq[(String, Int)],
                           outCol: String = "split",
-                          mod: Int = 100): DataFrame = {
-    val pairs = pairsFor(media, modality, maxHamming)
-    try graft.text.LeakSafeSplit.byCluster(
-      media.select(col("media_id")), "media_id",
-      pairs.select("id_a", "id_b"), bands, outCol, mod = mod)
-    finally { pairs.unpersist(); () } // cluster labels are materialized
+                          mod: Int = 100): DataFrame = Cached.scope { s =>
+    // the pairs release on return: cluster labels are materialized
+    val pairs = s.own(pairsFor(media, modality, maxHamming))
+    graft.text.LeakSafeSplit.byCluster(media.select(col("media_id")),
+      "media_id", pairs.select("id_a", "id_b"), bands, outCol, mod = mod)
   }
 
   /** Carve a fixed-size eval set with CLUSTER QUARANTINE per stratum
@@ -83,14 +80,12 @@ object MediaSplit {
     * `train`. */
   def carveEval(media: DataFrame, modality: String, maxHamming: Int,
                 perStratum: Int, stratumCol: String = "source",
-                roleCol: String = "role"): DataFrame = {
-    val pairs = pairsFor(media, modality, maxHamming)
-    try {
-      val resolved = graft.dedup.DupClusters.resolve(
-        media.select(col("media_id"), col(stratumCol)), "media_id",
-        pairs.select("id_a", "id_b"))
-      graft.text.LeakSafeSplit.carveEval(resolved, "media_id",
-        "cluster_id", stratumCol, perStratum, roleCol)
-    } finally { pairs.unpersist(); () }
+                roleCol: String = "role"): DataFrame = Cached.scope { s =>
+    val pairs = s.own(pairsFor(media, modality, maxHamming))
+    val resolved = graft.dedup.DupClusters.resolve(
+      media.select(col("media_id"), col(stratumCol)), "media_id",
+      pairs.select("id_a", "id_b"))
+    graft.text.LeakSafeSplit.carveEval(resolved, "media_id",
+      "cluster_id", stratumCol, perStratum, roleCol)
   }
 }

@@ -40,6 +40,23 @@ object Multimodal {
   final case class MediaRecord(media_id: Long, media_type: String,
                                payload: Array[Byte], mime: String, source: String)
 
+  /** Map-only fingerprint pass over `modality` records: `rows` runs once
+    * per record inside mapPartitions (one decode each) and its rows are
+    * named `cols`. Any other media_type refuses loudly — a silently
+    * skipped record is a duplicate that survives. */
+  private[multimodal] def fingerprintPass[
+      T <: Product: scala.reflect.runtime.universe.TypeTag](
+      media: DataFrame, modality: String, cols: String*)(
+      rows: MediaRecord => IterableOnce[T]): DataFrame = {
+    import org.apache.spark.sql.Encoders
+    media.as[MediaRecord](Encoders.product[MediaRecord])
+      .mapPartitions(_.flatMap { r =>
+        require(r.media_type == modality,
+          s"media_id=${r.media_id}: $modality fingerprint over ${r.media_type}")
+        rows(r)
+      })(Encoders.product[T]).toDF(cols: _*)
+  }
+
   final case class MediaFeatures(media_id: Long, media_type: String,
                                  width: Int, height: Int, n_frames: Int,
                                  duration_ms: Long, feature: Array[Float])

@@ -2,7 +2,8 @@ package graft.multimodal
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.dedup.Cached
 
 /** PAIRED media-text curation — the crawl shape behind image-caption
   * training sets (LAION/DataComp-style): a pair survives only if its
@@ -40,8 +41,8 @@ object PairedCuration {
     * staged `caption_dup`. Pairs join on `media_id == capIdCol`; media
     * rows with no caption row are not pairs and do not appear. The
     * bounded eval sides (media profile / caption grams) BROADCAST.
-    * Output (media_id, media_type, stage), PERSISTED — unpersist once
-    * consumed. */
+    * Output (media_id, media_type, stage), under the
+    * [[graft.dedup.Cached]] contract. */
   def curate(media: DataFrame, captions: DataFrame, minCaptionChars: Long,
              maxHamming: Int, maxBucket: Long = 100000L,
              capIdCol: String = "doc_id", capLenCol: String = "n_chars",
@@ -50,7 +51,7 @@ object PairedCuration {
              capKeyCol: Option[String] = None,
              evalCaptions: Option[DataFrame] = None,
              capTextCol: String = "text",
-             shingleWords: Int = 4): DataFrame = {
+             shingleWords: Int = 4): DataFrame = Cached.scope { s =>
     require(minCaptionChars >= 0,
       s"minCaptionChars=$minCaptionChars must be >= 0")
     val cap = captions.select(
@@ -61,91 +62,76 @@ object PairedCuration {
     // caption-TEXT decontamination before any decode: the eval grams are
     // bounded and broadcast, the caption side is a map-side explode +
     // broadcast semi-join — the leaked pairs skip the decode entirely
-    val capCont = evalCaptions.map(ev => captionLeakIds(captions, ev,
-      capIdCol, capTextCol, shingleWords, maxEval))
+    val capCont = evalCaptions.map(ev => s.own(captionLeakIds(captions, ev,
+      capIdCol, capTextCol, shingleWords, maxEval)))
     // the decode pass runs ONLY on caption-surviving pairs — the gate
     // order is the cost order
     val decodeIn =
       paired.filter(col("__cap_len") >= minCaptionChars).drop("__cap_len")
-    val prof = MediaPipeline.profile(
+    val prof = s.hold(MediaPipeline.profile(
       capCont.fold(decodeIn)(cc =>
-        decodeIn.join(cc, Seq("media_id"), "left_anti")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        decodeIn.join(cc, Seq("media_id"), "left_anti"))))
     prof.count(): Unit // ONE decode per caption-surviving pair
-    val evalProf = evalMedia.map(e => MediaPipeline.profile(e)
-      .persist(StorageLevel.MEMORY_AND_DISK))
-    try {
-      evalProf.foreach { ep =>
-        val nEval = ep.count() // ONE decode per eval record
-        require(nEval <= maxEval,
-          s"eval set has $nEval records > maxEval=$maxEval — a broadcast " +
-            "this size would flood the executors; raise maxEval deliberately")
-      }
-      val gatedIn = prof.filter(col("passes"))
-      val pairs = graft.dedup.HammingBands.pairs(
-        gatedIn.select(col("media_id"), col("chash")),
-        "media_id", "chash", maxHamming, maxBucket, "paired-curation")
-        .select(col("id_a"), col("id_b"))
-      val mediaSurv = graft.dedup.DupClusters.survivorsBy(
-        gatedIn.select(col("media_id"), col("chash"), col("prefer")),
-        "media_id", pairs, prefer = col("prefer"))
-      // caption-key dedup among MEDIA survivors: one pair per spammed
-      // caption, min id wins — as a PRE-AGGREGATE, not a per-key window.
-      // The spammed caption (one boilerplate string across millions of
-      // perceptually DISTINCT images) is this stage's MOTIVATING case,
-      // so the hot key is the expected shape: min(media_id) per key is
-      // combiner-reduced (partial min on the map side — the mega-key
-      // arrives at its reducer as one row per input partition), where a
-      // row_number window would drag every row of the hot key into one
-      // partition. Survivors then keep by semi-join on the winning ids.
-      val surv = capKeyCol.fold(mediaSurv) { _ =>
-        val winners = mediaSurv
-          .join(paired.select(col("media_id"), col("__cap_key")),
-            Seq("media_id"))
-          .groupBy(col("__cap_key"))
-          .agg(min(col("media_id")).as("media_id"))
-        mediaSurv.join(winners.select("media_id"), Seq("media_id"),
-          "left_semi")
-      }
-      val contaminated = evalProf.map { ep =>
-        graft.dedup.HammingBands.decontaminateProbe(
-          surv.select(col("media_id"), col("chash")),
-          ep.select(col("media_id"), col("chash")),
-          "media_id", "chash", maxHamming)
-          .filter(col("contaminated"))
-          .select(col("media_id"), lit(true).as("__cont"))
-      }
-      val labeled = paired.select(col("media_id"), col("media_type"),
-        (col("__cap_len") < minCaptionChars).as("__cap_g"))
-        .join(prof.select(col("media_id"), col("passes")),
-          Seq("media_id"), "left")
-        .join(mediaSurv.select(col("media_id"), lit(true).as("__msurv")),
-          Seq("media_id"), "left")
-        .join(surv.select(col("media_id"), lit(true).as("__surv")),
-          Seq("media_id"), "left")
-      val withCapCont = capCont.fold(
-        labeled.withColumn("__cap_cont", lit(null).cast("boolean")))(cc =>
-        labeled.join(cc.withColumn("__cap_cont", lit(true)),
-          Seq("media_id"), "left"))
-      val withCont = contaminated.fold(
-        withCapCont.withColumn("__cont", lit(null).cast("boolean")))(c =>
-        withCapCont.join(c, Seq("media_id"), "left"))
-      val out = withCont.select(col("media_id"), col("media_type"),
-        when(col("__cap_g"), lit("caption_gated"))
-          .when(col("__cap_cont").isNotNull, lit("caption_contaminated"))
-          .when(!col("passes"), lit("media_gated"))
-          .when(col("__msurv").isNull, lit("dup_dropped"))
-          .when(col("__surv").isNull, lit("caption_dup"))
-          .when(col("__cont").isNotNull, lit("contaminated"))
-          .otherwise(lit("kept")).as("stage"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      out.count(): Unit
-      out
-    } finally {
-      prof.unpersist()
-      evalProf.foreach(_.unpersist())
-      ()
+    val evalProf = evalMedia.map(e => s.hold(MediaPipeline.profile(e)))
+    evalProf.foreach { ep =>
+      val nEval = ep.count() // ONE decode per eval record
+      require(nEval <= maxEval,
+        s"eval set has $nEval records > maxEval=$maxEval — a broadcast " +
+          "this size would flood the executors; raise maxEval deliberately")
     }
+    val mediaSurv = MediaPipeline.keepBest(s, prof, "mixed",
+      "paired-curation", maxHamming, maxBucket)
+      // caption-key dedup among MEDIA survivors: one pair per spammed
+    // caption, min id wins — as a PRE-AGGREGATE, not a per-key window.
+    // The spammed caption (one boilerplate string across millions of
+    // perceptually DISTINCT images) is this stage's MOTIVATING case,
+    // so the hot key is the expected shape: min(media_id) per key is
+    // combiner-reduced (partial min on the map side — the mega-key
+    // arrives at its reducer as one row per input partition), where a
+    // row_number window would drag every row of the hot key into one
+    // partition. Survivors then keep by semi-join on the winning ids.
+    val surv = capKeyCol.fold(mediaSurv) { _ =>
+      val winners = mediaSurv
+        .join(paired.select(col("media_id"), col("__cap_key")),
+          Seq("media_id"))
+        .groupBy(col("__cap_key"))
+        .agg(min(col("media_id")).as("media_id"))
+      mediaSurv.join(winners.select("media_id"), Seq("media_id"),
+        "left_semi")
+    }
+    val contaminated = evalProf.map { ep =>
+      graft.dedup.HammingBands.decontaminateProbe(
+        surv.select(col("media_id"), col("chash")),
+        ep.select(col("media_id"), col("chash")),
+        "media_id", "chash", maxHamming)
+        .filter(col("contaminated"))
+        .select(col("media_id"), lit(true).as("__cont"))
+    }
+    val labeled = paired.select(col("media_id"), col("media_type"),
+      (col("__cap_len") < minCaptionChars).as("__cap_g"))
+      .join(prof.select(col("media_id"), col("passes")),
+        Seq("media_id"), "left")
+      .join(mediaSurv.select(col("media_id"), lit(true).as("__msurv")),
+        Seq("media_id"), "left")
+      .join(surv.select(col("media_id"), lit(true).as("__surv")),
+        Seq("media_id"), "left")
+    val withCapCont = capCont.fold(
+      labeled.withColumn("__cap_cont", lit(null).cast("boolean")))(cc =>
+      labeled.join(cc.withColumn("__cap_cont", lit(true)),
+        Seq("media_id"), "left"))
+    val withCont = contaminated.fold(
+      withCapCont.withColumn("__cont", lit(null).cast("boolean")))(c =>
+      withCapCont.join(c, Seq("media_id"), "left"))
+    val out = s.hold(withCont.select(col("media_id"), col("media_type"),
+      when(col("__cap_g"), lit("caption_gated"))
+        .when(col("__cap_cont").isNotNull, lit("caption_contaminated"))
+        .when(!col("passes"), lit("media_gated"))
+        .when(col("__msurv").isNull, lit("dup_dropped"))
+        .when(col("__surv").isNull, lit("caption_dup"))
+        .when(col("__cont").isNotNull, lit("contaminated"))
+        .otherwise(lit("kept")).as("stage")))
+    out.count(): Unit
+    out
   }
 
   /** Pair ids whose caption shares at least one `shingleWords`-gram with
@@ -155,26 +141,24 @@ object PairedCuration {
     * map-side explode + broadcast semi-join, no caption shuffle. */
   private def captionLeakIds(captions: DataFrame, evalCaptions: DataFrame,
                              capIdCol: String, capTextCol: String,
-                             shingleWords: Int, maxEval: Long): DataFrame = {
+                             shingleWords: Int,
+                             maxEval: Long): DataFrame = Cached.scope { s =>
     require(shingleWords >= 1, s"shingleWords=$shingleWords must be >= 1")
     val grams = graft.dedup.MinHashDedup.shingles(col(capTextCol),
       shingleWords)
-    val bench = evalCaptions.select(explode(grams).as("__g")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nBench = bench.count()
-      require(nBench <= maxEval,
-        s"eval captions carry $nBench distinct grams > maxEval=$maxEval — " +
-          "a broadcast this size would flood the executors; raise maxEval " +
-          "deliberately")
-      val out = captions
-        .select(col(capIdCol).as("media_id"), explode(grams).as("__g"))
-        .join(broadcast(bench), Seq("__g"))
-        .select("media_id").distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      out.count(): Unit
-      out
-    } finally { bench.unpersist(); () }
+    val bench = s.hold(
+      evalCaptions.select(explode(grams).as("__g")).distinct())
+    val nBench = bench.count()
+    require(nBench <= maxEval,
+      s"eval captions carry $nBench distinct grams > maxEval=$maxEval — " +
+        "a broadcast this size would flood the executors; raise maxEval " +
+        "deliberately")
+    val out = s.hold(captions
+      .select(col(capIdCol).as("media_id"), explode(grams).as("__g"))
+      .join(broadcast(bench), Seq("__g"))
+      .select("media_id").distinct())
+    out.count(): Unit
+    out
   }
 
   /** [[curate]] with the DEEP leak guard: stages and labels exactly as
@@ -188,8 +172,7 @@ object PairedCuration {
     * misses. The part and orientation hashes ride the SAME profile
     * decode ([[MediaPipeline.profileDeep]]), so the cost contract is
     * unchanged: caption-failing pairs never decode, survivors decode
-    * exactly once end-to-end. Output (media_id, media_type, stage),
-    * PERSISTED — unpersist once consumed. */
+    * exactly once end-to-end. Output (media_id, media_type, stage). */
   def curateDeep(media: DataFrame, captions: DataFrame,
                  minCaptionChars: Long, maxHamming: Int,
                  minShared: Int = 2, tileW: Int = 16, tileH: Int = 16,
@@ -201,7 +184,7 @@ object PairedCuration {
                  capKeyCol: Option[String] = None,
                  evalCaptions: Option[DataFrame] = None,
                  capTextCol: String = "text",
-                 shingleWords: Int = 4): DataFrame = {
+                 shingleWords: Int = 4): DataFrame = Cached.scope { s =>
     require(minCaptionChars >= 0,
       s"minCaptionChars=$minCaptionChars must be >= 0")
     require(minShared >= 1, s"minShared=$minShared must be >= 1")
@@ -211,93 +194,79 @@ object PairedCuration {
         capKeyCol.map(k => col(k).as("__cap_key")).toSeq: _*)
     val paired = media.join(cap, Seq("media_id"))
     // caption-TEXT decontamination before any decode, as in [[curate]]
-    val capCont = evalCaptions.map(ev => captionLeakIds(captions, ev,
-      capIdCol, capTextCol, shingleWords, maxEval))
+    val capCont = evalCaptions.map(ev => s.own(captionLeakIds(captions, ev,
+      capIdCol, capTextCol, shingleWords, maxEval)))
     // ONE decode per caption-surviving pair: gates + whole hash + part
     // hashes + orientation hashes from the same profile pass
     val decodeIn =
       paired.filter(col("__cap_len") >= minCaptionChars).drop("__cap_len")
-    val prof = MediaPipeline.profileDeep(
+    val prof = s.hold(MediaPipeline.profileDeep(
       capCont.fold(decodeIn)(cc =>
         decodeIn.join(cc, Seq("media_id"), "left_anti")),
       tileW = tileW, tileH = tileH, windowFrames = windowFrames,
-      hopFrames = hopFrames)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      hopFrames = hopFrames))
     prof.count(): Unit
-    val evalProf = evalMedia.map(e => MediaPipeline.profileDeep(e,
+    val evalProf = evalMedia.map(e => s.hold(MediaPipeline.profileDeep(e,
       tileW = tileW, tileH = tileH, windowFrames = windowFrames,
-      hopFrames = hopFrames).persist(StorageLevel.MEMORY_AND_DISK))
-    try {
-      evalProf.foreach { ep =>
-        ep.count(): Unit // ONE decode per eval record
-        val nEval = ep.select(explode(col("parts"))).count() +
-          ep.select(explode(col("orients"))).count()
-        require(nEval <= maxEval,
-          s"eval set hashes $nEval part/orientation rows > " +
-            s"maxEval=$maxEval — a broadcast this size would flood the " +
-            "executors; raise maxEval deliberately")
-      }
-      val gatedIn = prof.filter(col("passes"))
-      val pairs = graft.dedup.HammingBands.pairs(
-        gatedIn.select(col("media_id"), col("chash")),
-        "media_id", "chash", maxHamming, maxBucket, "paired-deep")
-        .select(col("id_a"), col("id_b"))
-      val mediaSurv = graft.dedup.DupClusters.survivorsBy(
-        gatedIn.select(col("media_id"), col("chash"), col("prefer")),
-        "media_id", pairs, prefer = col("prefer"))
-      // caption-key pre-aggregate, identical to [[curate]]'s
-      val surv = capKeyCol.fold(mediaSurv) { _ =>
-        val winners = mediaSurv
-          .join(paired.select(col("media_id"), col("__cap_key")),
-            Seq("media_id"))
-          .groupBy(col("__cap_key"))
-          .agg(min(col("media_id")).as("media_id"))
-        mediaSurv.join(winners.select("media_id"), Seq("media_id"),
-          "left_semi")
-      }
-      val contaminated = evalProf.map { ep =>
-        Seq("image", "audio", "video").map { m =>
-          MediaPipeline.deepLeakFlags(
-            prof.filter(col("media_type") === m),
-            surv.join(prof.select(col("media_id"), col("media_type")),
-              Seq("media_id"))
-              .filter(col("media_type") === m)
-              .select(col("media_id"), col("chash")),
-            ep, m, maxHamming, minShared)
-        }.reduce(_ unionByName _)
-          .select(col("media_id"), lit(true).as("__cont"))
-      }
-      val labeled = paired.select(col("media_id"), col("media_type"),
-        (col("__cap_len") < minCaptionChars).as("__cap_g"))
-        .join(prof.select(col("media_id"), col("passes")),
-          Seq("media_id"), "left")
-        .join(mediaSurv.select(col("media_id"), lit(true).as("__msurv")),
-          Seq("media_id"), "left")
-        .join(surv.select(col("media_id"), lit(true).as("__surv")),
-          Seq("media_id"), "left")
-      val withCapCont = capCont.fold(
-        labeled.withColumn("__cap_cont", lit(null).cast("boolean")))(cc =>
-        labeled.join(cc.withColumn("__cap_cont", lit(true)),
-          Seq("media_id"), "left"))
-      val withCont = contaminated.fold(
-        withCapCont.withColumn("__cont", lit(null).cast("boolean")))(c =>
-        withCapCont.join(c, Seq("media_id"), "left"))
-      val out = withCont.select(col("media_id"), col("media_type"),
-        when(col("__cap_g"), lit("caption_gated"))
-          .when(col("__cap_cont").isNotNull, lit("caption_contaminated"))
-          .when(!col("passes"), lit("media_gated"))
-          .when(col("__msurv").isNull, lit("dup_dropped"))
-          .when(col("__surv").isNull, lit("caption_dup"))
-          .when(col("__cont").isNotNull, lit("contaminated"))
-          .otherwise(lit("kept")).as("stage"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      out.count(): Unit
-      out
-    } finally {
-      prof.unpersist()
-      evalProf.foreach(_.unpersist())
-      ()
+      hopFrames = hopFrames)))
+    evalProf.foreach { ep =>
+      ep.count(): Unit // ONE decode per eval record
+      val nEval = ep.select(explode(col("parts"))).count() +
+        ep.select(explode(col("orients"))).count()
+      require(nEval <= maxEval,
+        s"eval set hashes $nEval part/orientation rows > " +
+          s"maxEval=$maxEval — a broadcast this size would flood the " +
+          "executors; raise maxEval deliberately")
     }
+    val mediaSurv = MediaPipeline.keepBest(s, prof, "mixed", "paired-deep",
+      maxHamming, maxBucket)
+      // caption-key pre-aggregate, identical to [[curate]]'s
+    val surv = capKeyCol.fold(mediaSurv) { _ =>
+      val winners = mediaSurv
+        .join(paired.select(col("media_id"), col("__cap_key")),
+          Seq("media_id"))
+        .groupBy(col("__cap_key"))
+        .agg(min(col("media_id")).as("media_id"))
+      mediaSurv.join(winners.select("media_id"), Seq("media_id"),
+        "left_semi")
+    }
+    val contaminated = evalProf.map { ep =>
+      Seq("image", "audio", "video").map { m =>
+        MediaPipeline.deepLeakFlags(
+          prof.filter(col("media_type") === m),
+          surv.join(prof.select(col("media_id"), col("media_type")),
+            Seq("media_id"))
+            .filter(col("media_type") === m)
+            .select(col("media_id"), col("chash")),
+          ep, m, maxHamming, minShared)
+      }.reduce(_ unionByName _)
+        .select(col("media_id"), lit(true).as("__cont"))
+    }
+    val labeled = paired.select(col("media_id"), col("media_type"),
+      (col("__cap_len") < minCaptionChars).as("__cap_g"))
+      .join(prof.select(col("media_id"), col("passes")),
+        Seq("media_id"), "left")
+      .join(mediaSurv.select(col("media_id"), lit(true).as("__msurv")),
+        Seq("media_id"), "left")
+      .join(surv.select(col("media_id"), lit(true).as("__surv")),
+        Seq("media_id"), "left")
+    val withCapCont = capCont.fold(
+      labeled.withColumn("__cap_cont", lit(null).cast("boolean")))(cc =>
+      labeled.join(cc.withColumn("__cap_cont", lit(true)),
+        Seq("media_id"), "left"))
+    val withCont = contaminated.fold(
+      withCapCont.withColumn("__cont", lit(null).cast("boolean")))(c =>
+      withCapCont.join(c, Seq("media_id"), "left"))
+    val out = s.hold(withCont.select(col("media_id"), col("media_type"),
+      when(col("__cap_g"), lit("caption_gated"))
+        .when(col("__cap_cont").isNotNull, lit("caption_contaminated"))
+        .when(!col("passes"), lit("media_gated"))
+        .when(col("__msurv").isNull, lit("dup_dropped"))
+        .when(col("__surv").isNull, lit("caption_dup"))
+        .when(col("__cont").isNotNull, lit("contaminated"))
+        .otherwise(lit("kept")).as("stage")))
+    out.count(): Unit
+    out
   }
 
   /** The paired run's data card: pairs per (modality, stage) — one

@@ -104,18 +104,28 @@ private[multimodal] object PngDecode {
     }
     if (colorType == 3 && palette == null)
       throw new IllegalArgumentException("png: palette image without PLTE")
+    // IHDR dimensions are untrusted: size in Long, and leave anything
+    // past one JVM array to ImageIO
+    val rawLen = (width.toLong * channels + 1) * height
+    if (rawLen > Int.MaxValue) return None
     val rowBytes = width * channels
-    val raw = new Array[Byte]((rowBytes + 1) * height)
+    val raw = new Array[Byte](rawLen.toInt)
     val inf = new Inflater()
-    inf.setInput(idat.toByteArray)
     var off = 0
-    while (off < raw.length && !inf.finished()) {
-      val n = inf.inflate(raw, off, raw.length - off)
-      if (n == 0 && inf.needsInput())
-        throw new IllegalArgumentException("png: truncated IDAT stream")
-      off += n
-    }
-    inf.end()
+    try {
+      inf.setInput(idat.toByteArray)
+      while (off < raw.length && !inf.finished()) {
+        val n = inf.inflate(raw, off, raw.length - off)
+        // no progress and not finished: out of input, or a stream that
+        // wants a preset dictionary (FDICT, forbidden in PNG) — either
+        // way it can never finish, so refuse instead of spinning
+        if (n == 0 && !inf.finished())
+          throw new IllegalArgumentException(
+            if (inf.needsInput()) "png: truncated IDAT stream"
+            else "png: IDAT stream cannot progress (preset dictionary?)")
+        off += n
+      }
+    } finally inf.end()
     if (off != raw.length)
       throw new IllegalArgumentException(
         s"png: expected ${raw.length} filtered bytes, inflated $off")

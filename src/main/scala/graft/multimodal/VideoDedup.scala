@@ -1,28 +1,26 @@
 package graft.multimodal
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-import Multimodal.{MediaCounters, MediaRecord}
+import graft.dedup.PerceptualDedup
+import graft.dedup.PerceptualDedup.Fingerprint
+import Multimodal.{MediaCounters, fingerprintPass}
 
 /** Perceptual VIDEO deduplication over REAL decoded frames — the video
   * sibling of [[ImageDedup]]/[[AudioDedup]], completing the modality set:
   * a 64-bit fingerprint folds the dHash of every sampled frame (decoded
   * through the unified container seam [[VideoCodec]] — animated GIF or
-  * AVI/MJPEG) by per-bit MAJORITY vote, the
-  * SimHash construction over frames instead of shingles. A re-encoded or
-  * re-containered copy shares its frame pixels, so it lands on the SAME
-  * fingerprint; a copy with a few perturbed frames (re-compression noise,
-  * a watermark on one frame) moves only the bits whose majority flips —
-  * Hamming-meaningful, so the shared pigeonhole banding
-  * ([[graft.dedup.HammingBands]]) gives near-dup pairing without an
-  * all-pairs scan. Exact dedup is a hash groupBy; incremental admission
-  * reuses the shared Bloom path. The hash pass is map-only (one reader
-  * per record, codec confined to mapPartitions) and every multi-branch
-  * face persists the (media_id, vhash) frame, so each video decodes
-  * exactly ONCE per job — at 100 TB of video, frame decode IS the job.
+  * AVI/MJPEG) by per-bit MAJORITY vote, the SimHash construction over
+  * frames instead of shingles. A re-encoded or re-containered copy
+  * shares its frame pixels, so it lands on the SAME fingerprint; a copy
+  * with a few perturbed frames moves only the bits whose majority flips.
+  * The time-sampled fold is frame-rate invariant; the part fingerprint
+  * hashes each sampled FRAME, which clipped and extended copies share.
+  *
+  * This object holds the fingerprint kernels and their map-only passes
+  * (one container reader per record); every dedup face is an adapter
+  * onto [[graft.dedup.PerceptualDedup]]. Faces returning a frame follow
+  * the [[graft.dedup.Cached]] contract.
   */
 object VideoDedup {
 
@@ -143,321 +141,125 @@ object VideoDedup {
     }
   }
 
-  /** Map-only TIME-SAMPLED hash pass: (media_id, vhash) with one
-    * container decode per record — feed [[exactGroups]]-shaped grouping
-    * or the shared banding for fps-invariant near-dup. */
-  def hashVideosAtFps(media: DataFrame, fps: Int): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions(_.map { r =>
-      require(r.media_type == "video",
-        s"media_id=${r.media_id}: video fingerprint over ${r.media_type}")
-      (r.media_id, fingerprint64AtFps(r.payload, fps))
-    }).toDF("media_id", "vhash")
-  }
+  private def vhash(pass: DataFrame => DataFrame) =
+    Fingerprint("video", "vhash", "video-dedup", pass)
+  private def frames(every: Int) = Fingerprint("video", "fhash",
+    "video-frames", hashFrames(_, every), Seq("frame_idx"))
 
-  /** Exact FPS-INVARIANT dedup: every video labeled with its
-    * time-sampled-fingerprint group's representative (min media_id) —
-    * a VFR clip and its constant-rate re-render land in ONE group. */
-  def exactGroupsAtFps(media: DataFrame, fps: Int): DataFrame =
-    hashVideosAtFps(media, fps).withColumn("group_rep",
-      min(col("media_id")).over(Window.partitionBy(col("vhash"))))
-      .select("media_id", "vhash", "group_rep")
+  /** Map-only hash pass: (media_id, vhash), one container decode per
+    * record. */
+  def hashVideos(media: DataFrame, every: Int = 1): DataFrame =
+    fingerprintPass(media, "video", "media_id", "vhash")(r =>
+      Iterator.single((r.media_id, fingerprint64(r.payload, every))))
 
-  /** Map-only hash pass: (media_id, vhash) with one container decode per
-    * record. Non-video payloads refuse loudly — a silently skipped video
-    * is a duplicate that survives. */
-  def hashVideos(media: DataFrame, every: Int = 1): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions(_.map { r =>
-      require(r.media_type == "video",
-        s"media_id=${r.media_id}: video fingerprint over ${r.media_type}")
-      (r.media_id, fingerprint64(r.payload, every))
-    }).toDF("media_id", "vhash")
-  }
+  /** Map-only TIME-SAMPLED hash pass: (media_id, vhash) from
+    * [[fingerprint64AtFps]], one container decode per record. */
+  def hashVideosAtFps(media: DataFrame, fps: Int): DataFrame =
+    fingerprintPass(media, "video", "media_id", "vhash")(r =>
+      Iterator.single((r.media_id, fingerprint64AtFps(r.payload, fps))))
 
-  /** Exact perceptual dedup: every video labeled with its group's
-    * representative (min media_id sharing the fingerprint). */
-  def exactGroups(media: DataFrame, every: Int = 1): DataFrame =
-    hashVideos(media, every).withColumn("group_rep",
-      min(col("media_id")).over(Window.partitionBy(col("vhash"))))
-      .select("media_id", "vhash", "group_rep")
-
-  /** Near-duplicate pairs among (media_id, vhash) rows through the
-    * shared banding. The hash lineage (a full frame-decode pass when
-    * `hashes` comes straight off [[hashVideos]]) is persisted and
-    * materialized here — each video decodes exactly ONCE per job. The
-    * returned frame is PERSISTED; unpersist it once consumed. */
-  def nearDupPairs(hashes: DataFrame, maxHamming: Int,
-                   maxBucket: Long = 100000L): DataFrame = {
-    val h = hashes.persist(StorageLevel.MEMORY_AND_DISK)
-    h.count(): Unit // materialize: the decode pass runs exactly once
-    val pairs = graft.dedup.HammingBands.pairs(
-      h, "media_id", "vhash", maxHamming, maxBucket, "video-dedup")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    pairs.count(): Unit // pin the (tiny) pairs, then release the hashes
-    h.unpersist()
-    pairs
-  }
-
-  /** Near-dup clusters over a video table: hash, pair, resolve connected
-    * components. Output (media_id, cluster_id), singletons their own
-    * cluster; the returned frame is PERSISTED — unpersist once consumed.
-    * One decode per video per job. */
-  def clusters(media: DataFrame, maxHamming: Int,
-               maxBucket: Long = 100000L, every: Int = 1): DataFrame = {
-    val h = hashVideos(media, every).persist(StorageLevel.MEMORY_AND_DISK)
-    h.count(): Unit // materialize: the decode pass runs exactly once
-    try {
-      val pairs = graft.dedup.HammingBands.pairs(
-        h, "media_id", "vhash", maxHamming, maxBucket, "video-dedup")
-        .select(col("id_a"), col("id_b"))
-      val out = graft.dedup.DupClusters.resolve(
-        h.select(col("media_id")), "media_id", pairs)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      out.count(): Unit
-      out
-    } finally { h.unpersist(); () }
-  }
-
-  /** O(batch) incremental admission against a committed fingerprint
-    * store (one string column `h`), through the shared Bloom-prefilter
-    * path — byte-identical to the exact anti-join. */
-  def incrementalSurvivors(batch: DataFrame, committedHashes: DataFrame,
-                           fpp: Double = 0.01, every: Int = 1): DataFrame =
-    graft.dedup.IncrementalDedup.survivors(
-      hashVideos(batch, every), committedHashes, "media_id",
-      col("vhash").cast("string"), fpp)
-
-  /** Map-only FRAME hash pass: one row per sampled frame —
-    * (media_id, frame_idx, fhash), fhash = the frame's image dHash. The
-    * per-frame face of [[hashVideos]]; one container decode per record. */
+  /** Map-only FRAME pass: (media_id, frame_idx, fhash), one row per
+    * sampled frame, fhash = the frame's image dHash. One container
+    * decode per record. */
   def hashFrames(media: DataFrame, every: Int = 1): DataFrame = {
     require(every >= 1, s"every=$every must be >= 1")
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions(_.flatMap { r =>
-      require(r.media_type == "video",
-        s"media_id=${r.media_id}: frame hashing over ${r.media_type}")
+    fingerprintPass(media, "video", "media_id", "frame_idx", "fhash") { r =>
       require(VideoCodec.isVideo(r.payload),
         s"media_id=${r.media_id}: payload is not a decodable video " +
           "container (GIF/AVI) — no in-JVM codec for mp4/webm")
       MediaCounters.videoReads.incrementAndGet(): Unit
       VideoCodec.withFrames(r.payload) { v =>
-        val n = v.numFrames
-        (0 until n by every).map { i =>
+        (0 until v.numFrames by every).map { i =>
           val (l, fw, fh) = v.lumaFrame(i)
           (r.media_id, i, ImageDedup.dHashOfLuma(l, fw, fh))
         }.toVector
       }
-    }).toDF("media_id", "frame_idx", "fhash")
+    }
   }
 
-  /** CROSS-MODAL decontamination: flag every corpus VIDEO containing ANY
-    * sampled frame within `maxHamming` of ANY eval IMAGE's perceptual
-    * hash — the guard for benchmark imagery embedded inside video
-    * content, which whole-video fingerprints cannot see (one planted
-    * frame barely moves the majority fold). Eval images hash through
-    * [[ImageDedup.hashImages]] and BROADCAST as bands; the corpus's
-    * frame hashes never shuffle. One container decode per video and one
-    * image decode per eval record per job. Output (media_id,
-    * contaminated) for every corpus video, PERSISTED — unpersist once
-    * consumed. */
-  def decontaminateFrames(corpus: DataFrame, evalImages: DataFrame,
-                          maxHamming: Int, maxEval: Long = 100000L,
-                          every: Int = 1): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 16,
-      s"maxHamming $maxHamming not in [0,16]")
-    val evalHashes = ImageDedup.hashImages(evalImages)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nEval = evalHashes.count()
-      require(nEval <= maxEval,
-        s"eval set has $nEval images > maxEval=$maxEval — a broadcast " +
-          "this size would flood the executors; raise maxEval deliberately")
-      val frames = hashFrames(corpus, every)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      frames.count(): Unit // ONE container decode; probe + outcome reuse it
-      try {
-        import graft.dedup.HammingBands
-        val hits = HammingBands.explodeBands(
-          frames.select(col("media_id"), col("fhash").as("__hc")),
-          "__hc", maxHamming)
-          .join(broadcast(HammingBands.explodeBands(
-            evalHashes.select(col("media_id").as("__eval_id"),
-              col("dhash").as("__he")), "__he", maxHamming)),
-            Seq("band", "value"))
-          .filter(bit_count(col("__hc").bitwiseXOR(col("__he"))) <= maxHamming)
-          .select("media_id").distinct()
-        val out = frames.select("media_id").distinct()
-          .join(hits.withColumn("contaminated", lit(true)),
-            Seq("media_id"), "left")
-          .select(col("media_id"),
-            coalesce(col("contaminated"), lit(false)).as("contaminated"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        out.count(): Unit
-        out
-      } finally { frames.unpersist(); () }
-    } finally { evalHashes.unpersist(); () }
-  }
+  /** Exact dedup: (media_id, vhash, group_rep), group_rep = min media_id
+    * sharing the fingerprint. */
+  def exactGroups(media: DataFrame, every: Int = 1): DataFrame =
+    PerceptualDedup.exactGroups(media, vhash(hashVideos(_, every)))
 
-  /** Frame-overlap edges from a frame-hash frame: banded frame pairing
-    * over a TWO-COLUMN (media_id, frame_idx) struct key — no arithmetic
-    * packing, so the full signed-64-bit media_id range (portableHash60
-    * ids included) and any frame count are valid — aggregated to video
-    * pairs with >= minShared distinct matching frame pairs. */
-  private def overlapEdges(frames: DataFrame, maxHamming: Int,
-                           minShared: Int, maxBucket: Long): DataFrame = {
-    require(minShared >= 1, s"minShared=$minShared must be >= 1")
-    val fids = frames.select(
-      struct(col("media_id"), col("frame_idx")).as("fid"), col("fhash"))
-    graft.dedup.HammingBands.pairs(
-      fids, "fid", "fhash", maxHamming, maxBucket, "video-frames")
-      .select(col("id_a.media_id").as("va"), col("id_b.media_id").as("vb"),
-        col("id_a"), col("id_b"))
-      .filter(col("va") =!= col("vb"))
-      .select(least(col("va"), col("vb")).as("id_a"),
-        greatest(col("va"), col("vb")).as("id_b"),
-        col("id_a").as("fa"), col("id_b").as("fb"))
-      .groupBy("id_a", "id_b")
-      .agg(countDistinct(struct(col("fa"), col("fb"))).as("shared"))
-      .filter(col("shared") >= minShared)
-  }
+  /** Exact FPS-INVARIANT dedup: [[exactGroups]] over the time-sampled
+    * fingerprint — a VFR clip and its constant-rate re-render land in
+    * ONE group. */
+  def exactGroupsAtFps(media: DataFrame, fps: Int): DataFrame =
+    PerceptualDedup.exactGroups(media, vhash(hashVideosAtFps(_, fps)))
 
-  /** Frame-OVERLAP pairs: videos sharing at least `minShared`
-    * near-identical frames — the duplicate class the whole-video
-    * majority fold cannot see (a CLIPPED or EXTENDED copy shares its
-    * frames with the original, but added/removed frames move the fold).
-    * Frame-level banded pairing over (media_id, frame_idx) struct keys,
-    * then one aggregate to video pairs. Output (id_a, id_b, shared) with
-    * id_a < id_b, `shared` = number of distinct matching frame pairs.
-    * One container decode per video; the returned frame is PERSISTED —
-    * unpersist once consumed. */
-  def sharedFramePairs(media: DataFrame, maxHamming: Int,
-                       minShared: Int = 2, maxBucket: Long = 100000L,
-                       every: Int = 1): DataFrame = {
-    val frames = hashFrames(media, every).persist(StorageLevel.MEMORY_AND_DISK)
-    frames.count(): Unit // ONE container decode per video
-    try {
-      val out = overlapEdges(frames, maxHamming, minShared, maxBucket)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      out.count(): Unit
-      out
-    } finally { frames.unpersist(); () }
-  }
+  /** Near-dup pairs (id_a, id_b, hamming), id_a < id_b, among
+    * (media_id, vhash) rows. */
+  def nearDupPairs(hashes: DataFrame, maxHamming: Int,
+                   maxBucket: Long = 100000L): DataFrame =
+    PerceptualDedup.nearDupPairs(hashes, vhash(hashVideos(_)), maxHamming,
+      maxBucket)
 
-  /** Frame-overlap CLUSTERS: connected components over
-    * [[sharedFramePairs]] edges — clipped and extended copies land in
-    * their original's cluster. Output (media_id, cluster_id), singletons
-    * their own cluster; PERSISTED — unpersist once consumed. */
-  def overlapClusters(media: DataFrame, maxHamming: Int,
-                      minShared: Int = 2, maxBucket: Long = 100000L,
-                      every: Int = 1): DataFrame = {
-    val h = hashFrames(media, every).persist(StorageLevel.MEMORY_AND_DISK)
-    h.count(): Unit
-    try {
-      val edges = overlapEdges(h, maxHamming, minShared, maxBucket)
-        .select("id_a", "id_b")
-      val out = graft.dedup.DupClusters.resolve(
-        h.select(col("media_id")).distinct(), "media_id", edges)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      out.count(): Unit
-      out
-    } finally { h.unpersist(); () }
-  }
+  /** Near-dup clusters: (media_id, cluster_id), singletons their own. */
+  def clusters(media: DataFrame, maxHamming: Int,
+               maxBucket: Long = 100000L, every: Int = 1): DataFrame =
+    PerceptualDedup.clusters(media, vhash(hashVideos(_, every)), maxHamming,
+      maxBucket)
 
-  /** KEEP-LONGEST frame-overlap dedup: cluster clipped/extended copies
-    * through the frame-overlap edges and keep the member with the MOST
-    * sampled frames per cluster (ties broken on minimum id) — the video
-    * face of [[ImageDedup.survivorsByResolution]]'s keep-best policy,
-    * where a clipped re-upload loses to the full cut. Frame counts come
-    * from the SAME persisted frame pass that generates the overlap
-    * edges, so the job still pays exactly one container decode per
-    * video. Output (media_id, n_frames — survivors only), PERSISTED —
-    * unpersist once consumed. */
-  def survivorsByFrames(media: DataFrame, maxHamming: Int,
-                        minShared: Int = 2, maxBucket: Long = 100000L,
-                        every: Int = 1): DataFrame = {
-    val h = hashFrames(media, every).persist(StorageLevel.MEMORY_AND_DISK)
-    h.count(): Unit // ONE container decode: edges + counts reuse the cache
-    try {
-      val edges = overlapEdges(h, maxHamming, minShared, maxBucket)
-        .select("id_a", "id_b")
-      val perVideo = h.groupBy(col("media_id"))
-        .agg(count(lit(1)).as("n_frames"))
-      val out = graft.dedup.DupClusters.survivorsBy(
-        perVideo, "media_id", edges, prefer = col("n_frames"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      out.count(): Unit
-      out
-    } finally { h.unpersist(); () }
-  }
+  /** O(batch) admission against a committed fingerprint store (one
+    * string column `h`) through the shared Bloom path. */
+  def incrementalSurvivors(batch: DataFrame, committedHashes: DataFrame,
+                           fpp: Double = 0.01, every: Int = 1): DataFrame =
+    PerceptualDedup.incrementalSurvivors(batch, committedHashes,
+      vhash(hashVideos(_, every)), fpp)
 
-  /** Video DECONTAMINATION — flag every corpus video whose fingerprint
-    * lies within `maxHamming` of ANY eval video (re-encoded and
-    * frame-perturbed copies of benchmark clips included). Bounded eval
-    * broadcast, zero corpus shuffle, one container decode per side per
-    * job. Output (media_id, contaminated), PERSISTED — unpersist once
-    * consumed. */
+  /** Eval-set DECONTAMINATION: (media_id, contaminated) per corpus video,
+    * true within `maxHamming` of ANY eval video. */
   def decontaminate(corpus: DataFrame, eval: DataFrame, maxHamming: Int,
-                    maxEval: Long = 100000L, every: Int = 1): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 16,
-      s"maxHamming $maxHamming not in [0,16]")
-    val evalHashes = hashVideos(eval, every)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try { // eval unpersists on EVERY exit — a maxEval refusal must not
-      // leak a cache that silently serves the next job's hash frame
-      val nEval = evalHashes.count() // also materializes: eval decodes once
-      require(nEval <= maxEval,
-        s"eval set has $nEval videos > maxEval=$maxEval — a broadcast this " +
-          "size would flood the executors; raise maxEval deliberately")
-      val corpusHashes = hashVideos(corpus, every)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      corpusHashes.count(): Unit
-      try {
-        val out = graft.dedup.HammingBands.decontaminateProbe(
-          corpusHashes, evalHashes, "media_id", "vhash", maxHamming)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        out.count(): Unit
-        out
-      } finally { corpusHashes.unpersist(); () }
-    } finally { evalHashes.unpersist(); () }
-  }
+                    maxEval: Long = 100000L, every: Int = 1): DataFrame =
+    PerceptualDedup.decontaminate(corpus, eval, vhash(hashVideos(_, every)),
+      maxHamming, maxEval)
 
-  /** FPS-INVARIANT video decontamination — [[decontaminate]]'s shape
-    * over TIME-SAMPLED fingerprints ([[fingerprint64AtFps]]): a
-    * frame-rate-converted re-render of benchmark video (a VFR clip
-    * re-encoded at constant rate, pulldown duplication) drifts the
-    * index-based fold far from its source and sails through the whole-
-    * fold probe; the time-sampled fold weighs content by wall time, so
-    * any re-render of the same timeline lands within re-encode
-    * tolerance. Bounded eval BROADCASTS; the corpus never shuffles.
-    * Output (media_id, contaminated) per corpus video, PERSISTED —
-    * unpersist once consumed. */
+  /** FPS-INVARIANT decontamination: [[decontaminate]] over time-sampled
+    * fingerprints, so a frame-rate-converted re-render of benchmark video
+    * still flags. */
   def decontaminateAtFps(corpus: DataFrame, eval: DataFrame, fps: Int,
                          maxHamming: Int,
-                         maxEval: Long = 100000L): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 16,
-      s"maxHamming $maxHamming not in [0,16]")
-    val evalHashes = hashVideosAtFps(eval, fps)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try { // eval unpersists on EVERY exit — a maxEval refusal must not
-      // leak a cache that silently serves the next job's hash frame
-      val nEval = evalHashes.count() // also materializes: eval decodes once
-      require(nEval <= maxEval,
-        s"eval set has $nEval videos > maxEval=$maxEval — a broadcast this " +
-          "size would flood the executors; raise maxEval deliberately")
-      val corpusHashes = hashVideosAtFps(corpus, fps)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      corpusHashes.count(): Unit
-      try {
-        val out = graft.dedup.HammingBands.decontaminateProbe(
-          corpusHashes, evalHashes, "media_id", "vhash", maxHamming)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        out.count(): Unit
-        out
-      } finally { corpusHashes.unpersist(); () }
-    } finally { evalHashes.unpersist(); () }
-  }
+                         maxEval: Long = 100000L): DataFrame =
+    PerceptualDedup.decontaminate(corpus, eval,
+      vhash(hashVideosAtFps(_, fps)), maxHamming, maxEval)
+
+  /** CROSS-MODAL decontamination: a corpus VIDEO flags when ANY sampled
+    * frame lies within `maxHamming` of ANY eval IMAGE's dHash — benchmark
+    * imagery embedded in video, which one planted frame hides from the
+    * majority fold. (media_id, contaminated) for every video that
+    * sampled a frame. */
+  def decontaminateFrames(corpus: DataFrame, evalImages: DataFrame,
+                          maxHamming: Int, maxEval: Long = 100000L,
+                          every: Int = 1): DataFrame =
+    PerceptualDedup.decontaminateParts(corpus, evalImages, frames(every),
+      maxHamming, minShared = 1, maxEval, evalFp = Some(ImageDedup.dhash),
+      everyInput = false)
+
+  /** Frame-OVERLAP pairs: videos sharing >= `minShared` near-identical
+    * frames (clipped and extended copies) — (id_a, id_b, shared),
+    * id_a < id_b. */
+  def sharedFramePairs(media: DataFrame, maxHamming: Int,
+                       minShared: Int = 2, maxBucket: Long = 100000L,
+                       every: Int = 1): DataFrame =
+    PerceptualDedup.sharedPairs(media, frames(every), maxHamming, minShared,
+      maxBucket)
+
+  /** Frame-overlap clusters over [[sharedFramePairs]] edges: (media_id,
+    * cluster_id) for every video that sampled a frame. */
+  def overlapClusters(media: DataFrame, maxHamming: Int,
+                      minShared: Int = 2, maxBucket: Long = 100000L,
+                      every: Int = 1): DataFrame =
+    PerceptualDedup.partClusters(media, frames(every), maxHamming,
+      minShared, maxBucket, everyInput = false)
+
+  /** KEEP-LONGEST frame-overlap dedup: per cluster the video with the
+    * most sampled frames survives (ties on min id) — a clipped re-upload
+    * loses to the full cut. Output (media_id, n_frames), survivors
+    * only. */
+  def survivorsByFrames(media: DataFrame, maxHamming: Int,
+                        minShared: Int = 2, maxBucket: Long = 100000L,
+                        every: Int = 1): DataFrame =
+    PerceptualDedup.partSurvivors(media, frames(every), "n_frames",
+      maxHamming, minShared, maxBucket)
 }

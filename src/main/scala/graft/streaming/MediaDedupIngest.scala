@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
+import graft.dedup.Cached
 
 import graft.multimodal.{AudioDedup, ImageDedup, MediaPipeline, VideoDedup}
 
@@ -154,50 +154,50 @@ object MediaDedupIngest {
     guardFormat(spark, storePath, modality, partsSpec)
     val query = stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val committed = committedHashes(s, storePath, batchId)
-        val blooms = committedBlooms(s, storePath, batchId, fpp, maxSketches)
-        // the modality policy check rides the decode pass's own
-        // materializing aggregate below (one job, not a separate count;
-        // profile switches per media_type, so wrong-modality records
-        // decode as their OWN type before the check refuses the batch —
-        // nothing is written either way)
-        val hashed =
-          if (qualityGate || partHashes) {
-            if (partHashes)
-              // gates + whole hash + part hashes from ONE decode
-              MediaPipeline.profileDeep(batch, tileW = tileW, tileH = tileH,
-                windowFrames = windowFrames, hopFrames = hopFrames,
-                silenceFloor = silenceFloor, every = every)
-                .select(col("media_id"), col("media_type").as("__mt"),
-                  col("chash").as(hcol),
-                  (if (qualityGate) col("passes") else lit(true))
-                    .as("passes"),
-                  col("parts"))
-            else
-              MediaPipeline.profile(batch, every = every)
-                .select(col("media_id"), col("media_type").as("__mt"),
-                  col("chash").as(hcol),
-                  col("passes"), lit(null).as("parts"))
-          } else hashOf(batch).withColumn("__mt", lit(modality))
-            .withColumn("passes", lit(true))
-            .withColumn("parts", lit(null))
-        val hashes = hashed.persist(StorageLevel.MEMORY_AND_DISK)
-        // ONE materializing job: decode every record into the cache,
-        // count modality violations, and collect the batch's hash-bucket
-        // set (the committed-side partition prune) — the earlier shape
-        // paid three separate jobs for these
-        val head = hashes.agg(
-          coalesce(sum(when(col("__mt") =!= modality, 1L).otherwise(0L)),
-            lit(0L)),
-          collect_set(bucketOf(col(hcol).cast("string")))).collect()(0)
-        val nWrong = head.getLong(0)
-        require(nWrong == 0,
-          s"batch $batchId carries $nWrong non-$modality records — " +
-            "this store admits a single modality; route mixed crawls " +
-            "through one store per modality")
-        val batchBuckets = head.getSeq[Long](1).toArray
-        try {
+        Cached.scope { cache =>
+          val s = batch.sparkSession
+          val committed = committedHashes(s, storePath, batchId)
+          val blooms = committedBlooms(s, storePath, batchId, fpp, maxSketches)
+          // the modality policy check rides the decode pass's own
+          // materializing aggregate below (one job, not a separate count;
+          // profile switches per media_type, so wrong-modality records
+          // decode as their OWN type before the check refuses the batch —
+          // nothing is written either way)
+          val hashed =
+            if (qualityGate || partHashes) {
+              if (partHashes)
+                // gates + whole hash + part hashes from ONE decode
+                MediaPipeline.profileDeep(batch, tileW = tileW, tileH = tileH,
+                  windowFrames = windowFrames, hopFrames = hopFrames,
+                  silenceFloor = silenceFloor, every = every)
+                  .select(col("media_id"), col("media_type").as("__mt"),
+                    col("chash").as(hcol),
+                    (if (qualityGate) col("passes") else lit(true))
+                      .as("passes"),
+                    col("parts"))
+              else
+                MediaPipeline.profile(batch, every = every)
+                  .select(col("media_id"), col("media_type").as("__mt"),
+                    col("chash").as(hcol),
+                    col("passes"), lit(null).as("parts"))
+            } else hashOf(batch).withColumn("__mt", lit(modality))
+              .withColumn("passes", lit(true))
+              .withColumn("parts", lit(null))
+          val hashes = cache.hold(hashed)
+          // ONE materializing job: decode every record into the cache,
+          // count modality violations, and collect the batch's hash-bucket
+          // set (the committed-side partition prune) — the earlier shape
+          // paid three separate jobs for these
+          val head = hashes.agg(
+            coalesce(sum(when(col("__mt") =!= modality, 1L).otherwise(0L)),
+              lit(0L)),
+            collect_set(bucketOf(col(hcol).cast("string")))).collect()(0)
+          val nWrong = head.getLong(0)
+          require(nWrong == 0,
+            s"batch $batchId carries $nWrong non-$modality records — " +
+              "this store admits a single modality; route mixed crawls " +
+              "through one store per modality")
+          val batchBuckets = head.getSeq[Long](1).toArray
           if (qualityGate)
             hashes.filter(!col("passes")).select("media_id")
               .write.mode("overwrite")
@@ -209,12 +209,11 @@ object MediaDedupIngest {
           // the survivor part commit read it.
           val batchParts =
             if (!partHashes) None
-            else Some(hashes.filter(col("passes"))
+            else Some(cache.hold(hashes.filter(col("passes"))
               .select(col("media_id"), explode(col("parts")).as("__p"))
               .select(col("media_id"),
                 col("__p._3").cast("string").as("__ph"))
-              .distinct()
-              .persist(StorageLevel.MEMORY_AND_DISK))
+              .distinct()))
           // one materializing job per part frame: fills the cache and
           // returns the part bucket set for the committed-side prune
           val partBuckets = batchParts.map(bp =>
@@ -250,93 +249,82 @@ object MediaDedupIngest {
             val fromBatch = bp.join(minHolder, Seq("__ph"))
               .filter(col("media_id") > col("__minId"))
               .select(col("media_id"), col("__ph"))
-            fromCommitted.select(col("media_id"), col("__ph"))
+            cache.hold(fromCommitted.select(col("media_id"), col("__ph"))
               .unionByName(fromBatch).distinct()
               .groupBy("media_id")
               .agg(count(lit(1)).as("__n"))
               .filter(col("__n") >= minSharedParts)
-              .select("media_id")
-              .persist(StorageLevel.MEMORY_AND_DISK)
+              .select("media_id"))
           }
-          try {
-            // the refusal audit trail feeding admissionCard's
-            // n_part_refused (deterministic overwrite, replay-identical);
-            // this write is also partDups' materializing action — the
-            // admission anti-join below reads the filled cache
-            partDups.foreach(_.write.mode("overwrite")
-              .parquet(s"$storePath/part_refused/batch=$batchId"))
-            val admissible = partDups.fold(hashes.filter(col("passes")))(
-              pd => hashes.filter(col("passes"))
-                .join(pd, Seq("media_id"), "left_anti"))
-            // bucket-pruned exact verify: committed hb partitions
-            // outside the batch's bucket set never scan (sketch loads
-            // already skip the store entirely when blooms is empty)
-            val committedPruned =
-              if (blooms.isEmpty) committed
-              else pruneBuckets(committed, batchBuckets)
-            val surv = graft.dedup.IncrementalDedup.survivorsWithBlooms(
+          // the refusal audit trail feeding admissionCard's
+          // n_part_refused (deterministic overwrite, replay-identical);
+          // this write is also partDups' materializing action — the
+          // admission anti-join below reads the filled cache
+          partDups.foreach(_.write.mode("overwrite")
+            .parquet(s"$storePath/part_refused/batch=$batchId"))
+          val admissible = partDups.fold(hashes.filter(col("passes")))(
+            pd => hashes.filter(col("passes"))
+              .join(pd, Seq("media_id"), "left_anti"))
+          // bucket-pruned exact verify: committed hb partitions
+          // outside the batch's bucket set never scan (sketch loads
+          // already skip the store entirely when blooms is empty)
+          val committedPruned =
+            if (blooms.isEmpty) committed
+            else pruneBuckets(committed, batchBuckets)
+          val surv = cache.hold(
+            graft.dedup.IncrementalDedup.survivorsWithBlooms(
               admissible, committedPruned, "media_id",
-              col(hcol).cast("string"), blooms)
-              .persist(StorageLevel.MEMORY_AND_DISK)
-            val nSurv = surv.count()
-            try {
-              val hashDir = new Path(s"$storePath/hashes/batch=$batchId")
-              val hfs = hashDir.getFileSystem(
-                s.sparkContext.hadoopConfiguration)
-              // an all-duplicate batch commits NO hash partition (a
-              // zero-row partitionBy write would leave a fileless dir
-              // that breaks later partition discovery); determinism
-              // holds — a replay recomputes the same empty set
-              // (the tail publishes stay SEQUENTIAL deliberately: an A/B
-              // with the four pieces on concurrent driver threads ran
-              // 1.5x SLOWER — at micro-batch sizes the concurrent tiny
-              // jobs fight over scheduling/codegen locks instead of
-              // back-filling cores)
-              if (nSurv == 0) { hfs.delete(hashDir, true): Unit }
-              else
-                surv.select(col("content_hash").as("h"))
-                  .withColumn("hb", bucketOf(col("h")))
-                  .write.mode("overwrite").partitionBy("hb")
-                  .parquet(hashDir.toString)
-              val kept = batch.join(surv.select("media_id"),
-                Seq("media_id"), "left_semi")
-              // on-admit metadata scrub: a deterministic byte-level chunk
-              // walk (replays republish identically) that never changes
-              // the sample stream, so the committed fingerprint still
-              // matches the scrubbed payload
-              (if (scrubMetadata) graft.multimodal.MediaScrub.scrub(kept)
-               else kept)
-                .write.mode("overwrite")
-                .parquet(s"$storePath/survivors/batch=$batchId")
-              writeBatchSketch(s, storePath, batchId,
-                surv.select(col("content_hash").as("h")), nSurv, fpp)
-              batchParts.foreach { bp =>
-                // survivor part values from the CACHED part frame (the
-                // earlier shape re-exploded the hash cache here)
-                val survParts = bp
-                  .join(surv.select("media_id"), Seq("media_id"),
-                    "left_semi")
-                  .select(col("__ph").as("h"))
-                  .distinct()
-                  .persist(StorageLevel.MEMORY_AND_DISK)
-                try {
-                  val nParts = survParts.count()
-                  val partDir = new Path(s"$storePath/parts/batch=$batchId")
-                  if (nParts == 0) { hfs.delete(partDir, true): Unit }
-                  else
-                    survParts.withColumn("hb", bucketOf(col("h")))
-                      .write.mode("overwrite").partitionBy("hb")
-                      .parquet(partDir.toString)
-                  writeBatchSketch(s, storePath, batchId, survParts,
-                    nParts, fpp, sketchPrefix = "psketch-")
-                } finally { survParts.unpersist(); () }
-              }
-            } finally { surv.unpersist(); () }
-          } finally {
-            partDups.foreach(_.unpersist())
-            batchParts.foreach(_.unpersist()); ()
+              col(hcol).cast("string"), blooms))
+          val nSurv = surv.count()
+          val hashDir = new Path(s"$storePath/hashes/batch=$batchId")
+          val hfs = hashDir.getFileSystem(
+            s.sparkContext.hadoopConfiguration)
+          // an all-duplicate batch commits NO hash partition (a
+          // zero-row partitionBy write would leave a fileless dir
+          // that breaks later partition discovery); determinism
+          // holds — a replay recomputes the same empty set
+          // (the tail publishes stay SEQUENTIAL deliberately: an A/B
+          // with the four pieces on concurrent driver threads ran
+          // 1.5x SLOWER — at micro-batch sizes the concurrent tiny
+          // jobs fight over scheduling/codegen locks instead of
+          // back-filling cores)
+          if (nSurv == 0) { hfs.delete(hashDir, true): Unit }
+          else
+            surv.select(col("content_hash").as("h"))
+              .withColumn("hb", bucketOf(col("h")))
+              .write.mode("overwrite").partitionBy("hb")
+              .parquet(hashDir.toString)
+          val kept = batch.join(surv.select("media_id"),
+            Seq("media_id"), "left_semi")
+          // on-admit metadata scrub: a deterministic byte-level chunk
+          // walk (replays republish identically) that never changes
+          // the sample stream, so the committed fingerprint still
+          // matches the scrubbed payload
+          (if (scrubMetadata) graft.multimodal.MediaScrub.scrub(kept)
+           else kept)
+            .write.mode("overwrite")
+            .parquet(s"$storePath/survivors/batch=$batchId")
+          writeBatchSketch(s, storePath, batchId,
+            surv.select(col("content_hash").as("h")), nSurv, fpp)
+          batchParts.foreach { bp =>
+            // survivor part values from the CACHED part frame (the
+            // earlier shape re-exploded the hash cache here)
+            val survParts = cache.hold(bp
+              .join(surv.select("media_id"), Seq("media_id"),
+                "left_semi")
+              .select(col("__ph").as("h"))
+              .distinct())
+            val nParts = survParts.count()
+            val partDir = new Path(s"$storePath/parts/batch=$batchId")
+            if (nParts == 0) { hfs.delete(partDir, true): Unit }
+            else
+              survParts.withColumn("hb", bucketOf(col("h")))
+                .write.mode("overwrite").partitionBy("hb")
+                .parquet(partDir.toString)
+            writeBatchSketch(s, storePath, batchId, survParts,
+              nParts, fpp, sketchPrefix = "psketch-")
           }
-        } finally { hashes.unpersist(); () }
+        }
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
